@@ -5,11 +5,13 @@
 Runs from the root of a source tree that holds the
 ``fortisiem_clickhouse_monitor_spark`` package, in one process on
 ``local[$SPARK_GRAFT_CPUS]`` (default: every CPU this process may use).
-Set-up counts in ``setup_s``: registry import, session start, seeded
-input tables, an untimed output-check pass against the DuckDB oracles,
-and an untimed warm-up by concurrent clients.  Then one client runs whole
-passes over the workload's ops, each pass in a seed-fixed order, until
-``--seconds`` have been measured.
+Set-up: registry import, session start, seeded input tables, an
+output-check pass against the DuckDB oracles, and a warm-up by concurrent
+clients; ``setup_s`` counts all of it but the tables and the check, which
+are the benchmark's own work.  Then one client runs whole passes over the
+workload's ops, each pass in a seed-fixed order, until ``--seconds`` have
+been measured.  The latency metrics come from the untraced passes during
+which the hypervisor stole the least CPU time (``quiet_passes``).
 
 With ``--trace 0`` the last stdout line carries the end-to-end metrics;
 with ``--trace 1`` it carries the per-layer metrics from traced passes,
@@ -48,7 +50,6 @@ sys.dont_write_bytecode = True
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORK_ROOT = os.path.join(ROOT, ".perfbench_work")
-DRIVER_MEM = "2g"
 #: Concurrent clients in the untimed warm-up.
 WARM_CLIENTS = 3
 #: Hard stop for one run: the caller allows 180 s per run.
@@ -60,49 +61,13 @@ import tracing  # noqa: E402
 import workloads  # noqa: E402
 from tracing import PKG  # noqa: E402
 
-END_TO_END_UNITS = {
-    "setup_s": "s",
-    "pass_s": "s",
-    "op_p50_s": "s",
-    "op_p90_s": "s",
-    "peak_rss_mb": "MB",
-}
-PER_LAYER_UNITS = {
-    "registry.load_s": "s",
-    "session.start_s": "s",
-    "sources.tables.calls": "count",
-    "sources.tables.s": "s",
-    "sources.fixtures.calls": "count",
-    "sources.fixtures.s": "s",
-    "operators.build_self_s": "s",
-    "checkpoint.calls": "count",
-    "checkpoint.s": "s",
-    "catalyst.analysis_ms": "ms",
-    "catalyst.optimization_ms": "ms",
-    "catalyst.planning_ms": "ms",
-    "exec.s": "s",
-    "exec.sql_executions": "count",
-    "exec.jobs": "count",
-    "exec.tasks": "count",
-    "exec.shuffle_read_bytes": "bytes",
-    "exec.shuffle_write_bytes": "bytes",
-    "exec.spill_bytes": "bytes",
-    "exec.peak_memory_bytes": "bytes",
-    "exec.broadcast_bytes": "bytes",
-    "exec.broadcast_joins": "count",
-    "exec.shuffled_hash_joins": "count",
-    "exec.sort_merge_joins": "count",
-    "exec.single_partition_window_rows": "rows",
-    "exec.python_rows": "rows",
-    "exec.rows_out": "rows",
-    "operators.useful_ratio": "ratio",
-    "streaming.jobs.frame_s": "s",
-    "streaming.jobs.frames": "count",
-    "sources.writers.write_s": "s",
-    "sources.writers.bytes": "bytes",
-    "sources.writers.files": "count",
-    "bench.trace_overhead_frac": "ratio",
-}
+with open(os.path.join(ROOT, "BENCHMARK.json")) as _fh:
+    SPEC = json.load(_fh)
+
+
+def metric_units(kind: str) -> dict[str, str]:
+    """Name -> unit of the ``end_to_end`` or ``per_layer`` metrics."""
+    return {m["name"]: m["unit"] for m in SPEC[kind]}
 
 
 class RunTimeout(Exception):
@@ -136,7 +101,6 @@ def prepare_env(work: str) -> None:
     for d in dirs.values():
         os.makedirs(d)
     os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
-    os.environ.setdefault("SPARK_DRIVER_MEM", DRIVER_MEM)
     os.environ["SPARK_LOCAL_DIRS"] = dirs["local"]
     os.environ["TMPDIR"] = dirs["tmp"]
     tempfile.tempdir = dirs["tmp"]
@@ -144,13 +108,6 @@ def prepare_env(work: str) -> None:
     os.environ["PYTHONPATH"] = os.pathsep.join(
         p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
     )
-    # The heap is fixed and committed up front, as long-running JVMs are
-    # deployed: peak RSS then moves with off-heap memory (Arrow, Netty,
-    # metaspace, code cache) and the Python driver, not with when the
-    # collector last grew a heap sized from host RAM.
-    # SPARK_SUBMIT_OPTS reaches the driver JVM only, not spark-submit's
-    # launcher JVM, whose own -Xmx is smaller than the driver heap.
-    os.environ["SPARK_SUBMIT_OPTS"] = f"-Xms{os.environ['SPARK_DRIVER_MEM']} -XX:+AlwaysPreTouch"
     os.environ["JAVA_TOOL_OPTIONS"] = f"-Djava.io.tmpdir={dirs['tmp']} -XX:-UsePerfData"
     os.environ["PYSPARK_SUBMIT_ARGS"] = (
         f"--conf spark.sql.warehouse.dir={dirs['warehouse']} pyspark-shell"
@@ -163,6 +120,18 @@ def _proc_status_kb(pid, field: str) -> int:
             if line.startswith(field + ":"):
                 return int(line.split()[1])
     return 0
+
+
+def host_steal_s() -> float:
+    """CPU seconds the hypervisor has stolen from this host since boot."""
+    with open("/proc/stat") as fh:
+        return int(fh.readline().split()[8]) / os.sysconf("SC_CLK_TCK")
+
+
+def reset_peak_rss(pid) -> None:
+    """Restart ``pid``'s VmHWM from its current RSS (clear_refs code 5)."""
+    with open(f"/proc/{pid}/clear_refs", "w") as fh:
+        fh.write("5")
 
 
 def _children(pid: int) -> list[int]:
@@ -216,7 +185,7 @@ def host_facts(spark, args, sf) -> dict:
         "spark": spark.version,
         "python": platform.python_version(),
         "SPARK_GRAFT_CPUS": os.environ.get("SPARK_GRAFT_CPUS"),
-        "SPARK_DRIVER_MEM": os.environ.get("SPARK_DRIVER_MEM"),
+        "spark.driver.memory": spark.conf.get("spark.driver.memory"),
         "sf": sf,
         "seed": args.seed,
         "git_commit": commit,
@@ -252,8 +221,9 @@ class Runner:
     # -- set-up: output check and warm-up ----------------------------------
     def check(self, con, probes: dict) -> dict[str, dict]:
         """One untimed pass, ops in parallel: each op against its DuckDB
-        oracle twin on the same inputs; frame count against the oracle's
-        row count.  Each thread queries DuckDB through its own cursor."""
+        oracle twin on the same inputs.  Each thread queries DuckDB through
+        its own cursor.  Every later run of a monitor op must emit as many
+        frames as its oracle has rows (``_sink``)."""
         from fortisiem_clickhouse_monitor_spark import registry
 
         oracles = registry.oracle_sql()
@@ -281,10 +251,6 @@ class Runner:
             cursor.register("perfbench_oracle", oracle)
             problems = compare(df, cursor, "SELECT * FROM perfbench_oracle", require_rows=True)
             res["rows"] = oracle.num_rows
-            if op.sink == "frames":
-                frames = self.jobs.frame_syslog(df, op.payload).collect()
-                if len(frames) != oracle.num_rows:
-                    problems.append(f"frames={len(frames)} oracle rows={oracle.num_rows}")
             if op.query in probes:
                 res["probe"] = int(probes[op.query](self.spark, self.sf_dir))
         except Exception as exc:  # noqa: BLE001 — one op's failure is reported, the run goes on
@@ -316,6 +282,8 @@ class Runner:
     def run_op(self, op, pass_idx) -> tuple[bool, float]:
         tr = self.tracer
         tr.trace_id = f"{pass_idx}:{op.query}"
+        if tr.active:
+            self.spark.sparkContext.setJobDescription(tracing.OP_TAG + op.query)
         t = time.perf_counter()
         try:
             with tr.span("op", op=op.query, pass_idx=pass_idx):
@@ -363,7 +331,7 @@ class Runner:
         self.written.clear()
 
 
-def layer_metrics(tracer, exec_totals, n_traced, setup, check, traced_s, untraced_s) -> dict:
+def layer_metrics(tracer, exec_totals, op_rows, n_traced, setup, check, traced_s, untraced_s) -> dict:
     timed = [s for s in tracer.spans if s["trace"] is not None]
     tot = tracing.span_totals(timed)
 
@@ -378,8 +346,7 @@ def layer_metrics(tracer, exec_totals, n_traced, setup, check, traced_s, untrace
         if s["name"] == "catalyst":
             for k in phases:
                 phases[k] += s["phases_ms"].get(k, 0.0)
-    ok_rows = [r for r in check.values() if r.get("ok")]
-    probed = [r for r in ok_rows if r.get("probe")]
+    probes = {q: r["probe"] for q, r in check.items() if r.get("ok") and r.get("probe")}
     m = {
         "registry.load_s": setup["registry.load_s"],
         "session.start_s": setup["session.start_s"],
@@ -394,9 +361,10 @@ def layer_metrics(tracer, exec_totals, n_traced, setup, check, traced_s, untrace
         "catalyst.optimization_ms": phases["optimization"] / max(n_traced, 1),
         "catalyst.planning_ms": phases["planning"] / max(n_traced, 1),
         "exec.s": per_pass("exec"),
-        "exec.rows_out": float(sum(r["rows"] for r in ok_rows)),
         "operators.useful_ratio": (
-            sum(r["rows"] for r in probed) / sum(r["probe"] for r in probed) if probed else 0.0
+            sum(op_rows.get(q, 0.0) for q in probes) / max(n_traced, 1) / sum(probes.values())
+            if probes
+            else 0.0
         ),
         "streaming.jobs.frame_s": per_pass("streaming.jobs.frame"),
         "streaming.jobs.frames": attr_sum("streaming.jobs.frame", "frames"),
@@ -509,6 +477,11 @@ def run(args, work: str) -> int:
     return 0
 
 
+def codegen_compiles(spark) -> int:
+    """Classes Janino has compiled in this JVM so far."""
+    return spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def jvm_busy_s(spark) -> dict[str, float]:
     """Cumulative GC and JIT-compile seconds of the driver JVM."""
     mf = spark._jvm.java.lang.management.ManagementFactory
@@ -517,15 +490,31 @@ def jvm_busy_s(spark) -> dict[str, float]:
     return {"gc_s": gc_ms / 1e3, "jit_s": mf.getCompilationMXBean().getTotalCompilationTime() / 1e3}
 
 
+def quiet_passes(passes: list[dict]) -> list[dict]:
+    """The passes during which the hypervisor stole no more of the host's
+    CPU time than it did in the median pass: at least half of them, and
+    all of them on a host that steals nothing."""
+    cut = statistics.median(p["steal_frac"] for p in passes)
+    return [p for p in passes if p["steal_frac"] <= cut]
+
+
 def measure(args, wl, sf, spark, runner, tracer, stats, setup, check):
+    jvm_pid = spark._jvm.ProcessHandle.current().pid()
+    for pid in ("self", jvm_pid):
+        reset_peak_rss(pid)
     jvm_before = jvm_busy_s(spark)
     rng = random.Random(args.seed)
     t_first = time.perf_counter()
-    setup_s = t_first - _T0
+    # The generated tables and the oracle check are the benchmark's own
+    # work, not the engine's: they are left out of set-up time.
+    setup_s = t_first - _T0 - setup["datagen_s"] - setup["check_s"]
     deadline = t_first + args.seconds
-    untraced_s, traced_s, samples = [], [], []
-    per_op: dict[str, list[float]] = {op.query: [] for op in wl.ops}
-    exec_totals = dict.fromkeys(stats.COUNTERS if stats else (), 0.0)
+    untraced, traced_s = [], []
+    exec_totals = dict.fromkeys((*stats.COUNTERS, "catalyst.codegen_compiles") if stats else (), 0.0)
+    op_rows: dict[str, float] = {}
+    pass_jit_s: list[float] = []
+    pass_compiles: list[int] = []
+    pass_steal_s: list[float] = []
     attempted = failed = 0
     p = 0
     while True:
@@ -536,51 +525,66 @@ def measure(args, wl, sf, spark, runner, tracer, stats, setup, check):
         order = list(wl.ops)
         rng.shuffle(order)
         tracer.active = traced
+        jit_before = jvm_busy_s(spark)["jit_s"]
+        compiles_before = codegen_compiles(spark)
+        steal_before = host_steal_s()
+        ops_s: dict[str, float] = {}
         t = time.perf_counter()
         for op in order:
             ok, dt = runner.run_op(op, p)
             attempted += 1
             if not ok or op.query in runner.bad:
                 failed += 1
-            elif not traced:
-                samples.append(dt)
-                per_op[op.query].append(dt)
+            else:
+                ops_s[op.query] = dt
         elapsed = time.perf_counter() - t
+        pass_steal_s.append(host_steal_s() - steal_before)
+        pass_jit_s.append(jvm_busy_s(spark)["jit_s"] - jit_before)
+        pass_compiles.append(codegen_compiles(spark) - compiles_before)
         tracer.active = False
-        (traced_s if traced else untraced_s).append(elapsed)
+        if traced:
+            spark.sparkContext.setJobDescription(None)
+            traced_s.append(elapsed)
+        else:
+            steal_frac = pass_steal_s[-1] / (os.cpu_count() * elapsed)
+            untraced.append({"s": elapsed, "steal_frac": steal_frac, "ops_s": ops_s})
         runner.flush_outputs()
         if stats:
             if traced:
-                for k, v in stats.collect().items():
+                counts = stats.collect()
+                counts["catalyst.codegen_compiles"] = pass_compiles[-1]
+                for k, v in counts.items():
                     if k == "exec.peak_memory_bytes":
                         exec_totals[k] = max(exec_totals[k], v)
                     else:
                         exec_totals[k] += v
+                for q, rows in stats.rows_by_op.items():
+                    op_rows[q] = op_rows.get(q, 0.0) + rows
             else:
                 stats.skip()
         p += 1
-        both_kinds = not args.trace or (traced_s and len(untraced_s) > 1)
+        both_kinds = not args.trace or (traced_s and len(untraced) > 1)
         if time.perf_counter() >= deadline and both_kinds:
             break
 
     jvm_after = jvm_busy_s(spark)
-    rss_kb = _proc_status_kb("self", "VmHWM")
-    jvm_pid = spark._jvm.ProcessHandle.current().pid()
-    rss_kb += _proc_status_kb(jvm_pid, "VmHWM")
+    rss_kb = _proc_status_kb("self", "VmHWM") + _proc_status_kb(jvm_pid, "VmHWM")
+    untraced_s = [u["s"] for u in untraced]
+    quiet = quiet_passes(untraced)
+    samples = [dt for u in quiet for dt in u["ops_s"].values()]
     e2e = {
         "setup_s": setup_s,
-        "pass_s": statistics.median(untraced_s),
+        "pass_s": statistics.median(u["s"] for u in quiet),
         "op_p50_s": percentile(samples, 0.5) if samples else 0.0,
         "op_p90_s": percentile(samples, 0.9) if samples else 0.0,
-        "peak_rss_mb": rss_kb / 1024.0,
     }
     layers = None
     if args.trace:
         layers = layer_metrics(
-            tracer, exec_totals, len(traced_s), setup, check, traced_s, untraced_s[1:]
+            tracer, exec_totals, op_rows, len(traced_s), setup, check, traced_s, untraced_s[1:]
         )
     chosen = layers if args.trace else e2e
-    units = PER_LAYER_UNITS if args.trace else END_TO_END_UNITS
+    units = metric_units("per_layer" if args.trace else "end_to_end")
     line = {
         "correct": failed == 0 and all(r["ok"] for r in check.values()),
         "attempted": attempted,
@@ -593,20 +597,28 @@ def measure(args, wl, sf, spark, runner, tracer, stats, setup, check):
         "seconds": args.seconds,
         "trace": args.trace,
         "host": host_facts(spark, args, sf),
-        "end_to_end": {k: {"value": v, "unit": END_TO_END_UNITS[k]} for k, v in e2e.items()},
+        "end_to_end": {k: {"value": e2e[k], "unit": u} for k, u in metric_units("end_to_end").items()},
         "ops_failed_frac": {"value": failed / attempted, "unit": "1"},
         "op_samples": len(samples),
-        "passes": {"untraced": len(untraced_s), "traced": len(traced_s)},
+        "passes": {"untraced": len(untraced_s), "quiet": len(quiet), "traced": len(traced_s)},
         "pass_times_s": {"untraced": untraced_s, "traced": traced_s},
         "setup_parts_s": setup,
         "jvm_in_window_s": {k: jvm_after[k] - jvm_before[k] for k in jvm_after},
-        "per_op_median_s": {k: statistics.median(v) for k, v in per_op.items() if v},
+        "peak_rss_mb": rss_kb / 1024.0,
+        "pass_jit_s": pass_jit_s,
+        "pass_steal_s": pass_steal_s,
+        "pass_codegen_compiles": pass_compiles,
+        "per_op_median_s": {
+            q: statistics.median(u["ops_s"][q] for u in quiet if q in u["ops_s"])
+            for q in {q for u in quiet for q in u["ops_s"]}
+        },
         "check": check,
         "errors": runner.errors,
     }
     if layers is not None:
-        record["per_layer"] = {k: {"value": v, "unit": PER_LAYER_UNITS[k]} for k, v in layers.items()}
+        record["per_layer"] = line["metrics"]
         record["spans"] = tracing.span_totals(tracer.spans)
+        record["rows_out_per_traced_pass"] = {q: v / len(traced_s) for q, v in op_rows.items()}
     return record, line
 
 

@@ -9,7 +9,9 @@ time from them once the run ends.
 
 ``ExecStats`` reads the SQL and application status stores after each
 traced pass, so the per-node metrics (rows, shuffle, spill, broadcast,
-join strategy) cost nothing inside the timed region.
+join strategy) cost nothing inside the timed region.  In traced passes
+each op runs under the job description ``OP_TAG + query``, which Spark
+copies into the op's SQL executions; the newest one is the op's sink.
 """
 
 from __future__ import annotations
@@ -21,6 +23,7 @@ import time
 from collections import defaultdict
 
 PKG = "fortisiem_clickhouse_monitor_spark"
+OP_TAG = "perfbench op "
 
 
 class Tracer:
@@ -157,6 +160,7 @@ class ExecStats:
         "exec.sort_merge_joins",
         "exec.single_partition_window_rows",
         "exec.python_rows",
+        "exec.rows_out",
     )
 
     def __init__(self, spark) -> None:
@@ -164,6 +168,8 @@ class ExecStats:
         self._sql = spark._jsparkSession.sharedState().statusStore()
         self._app = self._sc.statusStore()
         self._next_id = 0
+        #: Rows out of each tagged op's sink in the last collected pass.
+        self.rows_by_op: dict[str, float] = {}
         self.skip()
 
     def _drain(self) -> None:
@@ -191,12 +197,17 @@ class ExecStats:
     def collect(self) -> dict[str, float]:
         """Totals over the executions since the last call."""
         out = dict.fromkeys(self.COUNTERS, 0.0)
-        for e in self._new_executions():
+        self.rows_by_op = {}
+        for e in self._new_executions():  # newest first
             out["exec.sql_executions"] += 1
-            self._plan_metrics(e.executionId(), out)
+            rows = self._plan_metrics(e.executionId(), out)
+            desc = e.description()
+            if desc.startswith(OP_TAG):
+                self.rows_by_op.setdefault(desc[len(OP_TAG) :], rows)
             jobs = e.jobs().keySet().iterator()
             while jobs.hasNext():
                 self._job_metrics(int(jobs.next()), out)
+        out["exec.rows_out"] = sum(self.rows_by_op.values())
         return out
 
     def _job_metrics(self, job_id: int, out: dict) -> None:
@@ -213,11 +224,16 @@ class ExecStats:
                 out["exec.peak_memory_bytes"], float(st.peakExecutionMemory())
             )
 
-    def _plan_metrics(self, exec_id: int, out: dict) -> None:
+    def _plan_metrics(self, exec_id: int, out: dict) -> float:
+        """Add the plan's node counters to ``out``; return the rows out of
+        its root, the plan's first node that is not a codegen cluster."""
         graph = self._sql.planGraph(exec_id)
         values = self._sql.executionMetrics(exec_id)
         nodes = {}
+        root = None
         for node in _scala_seq(graph.allNodes()):
+            if node.getClass().getSimpleName() != "SparkPlanGraphCluster":
+                root = node.id() if root is None else min(root, node.id())
             metrics = {}
             for m in _scala_seq(node.metrics()):
                 v = values.get(m.accumulatorId())
@@ -227,6 +243,12 @@ class ExecStats:
         children = defaultdict(list)
         for edge in _scala_seq(graph.edges()):
             children[edge.toId()].append(edge.fromId())
+
+        def rows_out(node_id: int) -> float:
+            metrics = nodes[node_id][2]
+            if "number of output rows" in metrics:
+                return metrics["number of output rows"]
+            return rows_into(node_id)
 
         def rows_into(node_id: int) -> float:
             total = 0.0
@@ -249,6 +271,7 @@ class ExecStats:
                 out["exec.single_partition_window_rows"] += rows_into(node_id)
             elif any(mark in name for mark in _PYTHON_NODE_MARKS) and name != "ColumnarToRow":
                 out["exec.python_rows"] += rows_into(node_id)
+        return rows_out(root) if root is not None else 0.0
 
 
 def self_times(spans: list[dict]) -> dict[int, float]:
