@@ -205,14 +205,15 @@ def graph_common_neighbors_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical (the wedge row count dominates, not the join).
 
     r9 opt round: the symmetrized edge list is hash-partitioned on the
-    middle vertex with a PINNED partition count before its checkpoint —
-    both wedge-join sides then read one co-partitioned frame (zero
-    join-side Exchange, guide §2.4) and, more importantly, the
-    wedge-generating join runs at full width: the edge list is
-    byte-SMALL, so AQE's byte-based coalescing was shrinking the join's
-    parallelism while each input row fans out into O(deg) wedge rows
-    (PLANS.md invariant #6 — the measured cause of the r8 scaling
-    block's 0.78 8-vs-32-core ratio)."""
+    middle vertex with a PINNED partition count before its checkpoint.
+    The checkpoint does NOT remove the join-side Exchange: a checkpoint
+    scan reports UnknownPartitioning under AQE, so a wedge join that
+    does not broadcast still shuffles both sides. The measured win comes
+    from the pinned partition width: the wedge-generating join runs at
+    full width, where AQE's byte-based coalescing was shrinking the
+    parallelism of a byte-SMALL edge list whose every row fans out into
+    O(deg) wedge rows (PLANS.md invariant #6 — the measured cause of the
+    r8 scaling block's 0.78 8-vs-32-core ratio)."""
     from .dedup import shared_ngram_pairs
 
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
@@ -1078,7 +1079,13 @@ def _adj_sides(adj: DataFrame, n_edges: int):
     rows carrying the deg-length nbrs arrays and spills them (the
     measured 20x failure mode: 31 GB spill at 4.3M edges).  The
     explicit pin matters doubly because ``adj`` is a checkpoint scan
-    with no size statistics."""
+    with no size statistics.
+
+    k-truss passes its ROUND-1 ``n_edges`` on every round rather than
+    recounting the survivors. The count is stale but safe: peeling only
+    drops edges, so the true count never exceeds it, and a stale count
+    can only keep the shuffled-hash side where broadcast would now fit —
+    never broadcast an edge set above the gate."""
     a_u = adj.select(F.col("u").alias("a"), F.col("nbrs").alias("nbrs_a"))
     a_v = adj.select(F.col("u").alias("b"), F.col("nbrs").alias("nbrs_b"))
     if n_edges <= TRUSS_BROADCAST_MAX_EDGES:

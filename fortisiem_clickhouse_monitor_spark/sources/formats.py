@@ -1,5 +1,6 @@
-"""Multi-format batch sources: CSV / JSON-lines / ORC readers with the
-same fixed-schema discipline as the parquet readers in tables.py.
+"""Multi-format batch sources: CSV / JSON-lines / ORC readers with
+explicit DDL schemas (tables.py's parquet readers instead infer each
+file's schema once from its footer and memoize it).
 
 The reference consumes JSON over HTTP (chStats.py:31-41); a production
 deployment of this engine additionally meets CSV drops and ORC lakes.

