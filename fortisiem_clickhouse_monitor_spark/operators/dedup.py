@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..functions import textfns, vectors
 from ..registry import register, register_probe
+from ..session import shared
 from ..sources.tables import bind, fanout, table
 
 _DUCK_TOKENS = (
@@ -214,97 +215,53 @@ def _jaccard_block_pairs(pdf):
 
 
 # ---------------------------------------------------------------------------
-# Opt-in shared-subtree cache for the verified near-dup pairs
+# Session-shared subtrees (session.share_subtrees)
 # ---------------------------------------------------------------------------
-
-#: (session id, sf_dir) -> localCheckpoint of dedup_ngram_jaccard_pairs.
-_SHARED_PAIRS: dict[tuple[int, str], DataFrame] = {}
-_SHARED_PAIRS_ON = False
-
-
-def enable_shared_pairs_cache(on: bool = True) -> None:
-    """Opt a long-lived session (bench.py owns one) into materializing
-    the verified near-dup pairs ONCE per (session, sf_dir) and serving
-    every downstream consumer (CC, triangles, reports, graph family —
-    ~17 queries) from the checkpoint.
-
-    OFF by default: the correctness gate and the scaling sweeps must
-    execute each query's full tree (a sweep alpha fitted over a cached
-    subtree would be a lie).  Bench enables it because that is also
-    the honest production shape — a real dedup pipeline scores pairs
-    once and fans out, it does not re-run the GEMM per report — and it
-    removes the +/-2-4 s session-noise band the re-executed subtree
-    put on every tail query (VERDICT r5 #7)."""
-    global _SHARED_PAIRS_ON
-    _SHARED_PAIRS_ON = on
-    if not on:
-        # Release the checkpoint blocks, not just the dict refs
-        # (ADVICE r7: toggling off used to leak them for the session).
-        from ..session import free_local_checkpoint
-
-        free_local_checkpoint(_SHARED_PAIRS)
-        free_local_checkpoint(_SHARED_STARS)
-        _SHARED_PAIRS.clear()
-        _SHARED_STARS.clear()
 
 
 def shared_ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The verified near-dup pairs frame, from the per-session cache
-    when `enable_shared_pairs_cache` is on, else computed fresh.
-    Internal consumers call this; the registered query itself always
-    computes fresh so its own bench timing stays honest."""
-    if not _SHARED_PAIRS_ON:
-        return dedup_ngram_jaccard_pairs(spark, sf_dir)
-    key = (id(spark), sf_dir)
-    if key not in _SHARED_PAIRS:
-        _SHARED_PAIRS[key] = dedup_ngram_jaccard_pairs(
-            spark, sf_dir
-        ).localCheckpoint(eager=True)
-    return _SHARED_PAIRS[key]
-
-
-#: (session id, sf_dir) -> star-forest contraction of the shared pairs.
-_SHARED_STARS: dict[tuple[int, str], DataFrame] = {}
+    """The verified near-dup pairs frame, built once per session while
+    `session.share_subtrees` is on and served to every downstream
+    consumer (CC, triangles, reports, graph family — ~17 queries), else
+    computed fresh.  Sharing also removes the +/-2-4 s session-noise
+    band the re-executed GEMM put on every tail query (VERDICT r5 #7).
+    The registered query itself always computes fresh so its own bench
+    timing stays honest."""
+    return shared(
+        spark,
+        sf_dir,
+        "ngram_pairs",
+        lambda: dedup_ngram_jaccard_pairs(spark, sf_dir),
+    )
 
 
 def shared_star_forest(
     spark: SparkSession, sf_dir: str, pairs: DataFrame | None = None
 ) -> DataFrame:
     """Star-forest edges (u=component root, v=leaf) of the verified
-    near-dup graph, cached per bench session under the SAME flag as
-    shared_ngram_pairs — the production shape one step further: a real
-    dedup pipeline labels components once and fans out (CC labels,
-    canonical pick, cohesion, size histogram, bounded-ANF scope all
-    read the same labels), it does not re-contract the graph per
-    report.  Fresh when the cache is off (correctness gate, sweeps).
+    near-dup graph, shared like shared_ngram_pairs — the production
+    shape one step further: a real dedup pipeline labels components
+    once and fans out (CC labels, canonical pick, cohesion, size
+    histogram, bounded-ANF scope all read the same labels), it does not
+    re-contract the graph per report.
 
     ``pairs``: a caller-materialized (doc_a, doc_b) frame to contract
-    on the FRESH path — callers that already checkpoint the pair list
-    for another subtree (cohesion's triangle counts) pass it so the
-    cache-off plan does not compute the pairs twice; ignored when the
-    session cache serves."""
-    if not _SHARED_PAIRS_ON:
-        if pairs is None:
-            pairs = shared_ngram_pairs(spark, sf_dir).select(
-                "doc_a", "doc_b"
-            )
-        edges = pairs.select(
+    while sharing is off — callers that already checkpoint the pair
+    list for another subtree (cohesion's triangle counts) pass it so
+    the fresh plan does not compute the pairs twice; ignored while
+    sharing is on (the shared pairs feed the shared contraction)."""
+    from .. import session
+
+    def build() -> DataFrame:
+        src = pairs
+        if src is None or session._SHARING:
+            src = shared_ngram_pairs(spark, sf_dir).select("doc_a", "doc_b")
+        edges = src.select(
             F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
         )
         return alternating_components(edges)[0]
-    key = (id(spark), sf_dir)
-    if key not in _SHARED_STARS:
-        edges = (
-            shared_ngram_pairs(spark, sf_dir)
-            .select("doc_a", "doc_b")
-            .select(
-                F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-            )
-        )
-        _SHARED_STARS[key] = alternating_components(edges)[
-            0
-        ].localCheckpoint(eager=True)
-    return _SHARED_STARS[key]
+
+    return shared(spark, sf_dir, "star_forest", build)
 
 
 # ---------------------------------------------------------------------------

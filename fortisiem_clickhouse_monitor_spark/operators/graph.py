@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import register, register_probe
+from ..session import shared
 from ..sources.tables import table
 
 _PR_ITERS = 6
@@ -1768,70 +1769,19 @@ def _hb_merge_round(sym: DataFrame, regs: DataFrame) -> DataFrame:
     )
 
 
-_SHARED_HB_ON = False
-_SHARED_HB: dict = {}
-
-
-#: (session id, sf_dir) -> LPA (node, community) labels.
-_SHARED_LPA: dict[tuple[int, str], DataFrame] = {}
-_SHARED_LPA_ON = False
-
-
-def enable_shared_lpa_cache(on: bool = True) -> None:
-    """Opt a long-lived session (bench.py owns one) into computing the
-    LPA label rounds ONCE per (session, sf_dir) and serving downstream
-    consumers (graph_modularity_lpa evaluates the partition those
-    rounds produce) from the checkpointed labels — the production
-    shape: communities are detected once, then scored/joined/reported,
-    not re-propagated per consumer.  OFF by default: the correctness
-    gate and the scaling sweeps must execute each query's full tree."""
-    global _SHARED_LPA_ON
-    _SHARED_LPA_ON = on
-    if not on:
-        # Release the checkpoint blocks, not just the dict refs — a
-        # localCheckpoint survives DataFrame GC for the session's
-        # lifetime (ADVICE r7: toggling off used to leak them).
-        from ..session import free_local_checkpoint
-
-        free_local_checkpoint(_SHARED_LPA)
-        _SHARED_LPA.clear()
-
-
 def shared_lpa_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LPA (node, community) labels, per-session-cached when the bench
-    cache is on, else computed fresh.  The registered LPA query itself
-    always computes fresh so its own bench timing stays honest."""
-    if not _SHARED_LPA_ON:
-        return graph_label_propagation(spark, sf_dir)
-    key = (id(spark), sf_dir)
-    if key not in _SHARED_LPA:
-        _SHARED_LPA[key] = graph_label_propagation(
-            spark, sf_dir
-        ).localCheckpoint(eager=True)
-    return _SHARED_LPA[key]
-
-
-def enable_shared_hb_cache(on: bool = True) -> None:
-    """Opt a long-lived session (bench.py owns one) into computing the
-    HyperBall register rounds ONCE per (session, sf_dir) and serving
-    the whole family — graph_anf_hll_eval, graph_effective_diameter,
-    graph_harmonic_centrality_sketch, and the bounded truth query —
-    from the checkpointed states (VERDICT r6 #4; same rationale as
-    dedup.enable_shared_pairs_cache: a production pipeline materializes
-    the sketch once and derives every statistic from it).
-
-    OFF by default: the correctness gate and the scaling sweeps must
-    execute each query's full tree."""
-    global _SHARED_HB_ON
-    _SHARED_HB_ON = on
-    if not on:
-        # The cached value is (sym, [round states]) — every element is
-        # a localCheckpoint; release the blocks, not just the refs
-        # (ADVICE r7, same fix as the LPA/k-means toggles).
-        from ..session import free_local_checkpoint
-
-        free_local_checkpoint(_SHARED_HB)
-        _SHARED_HB.clear()
+    """LPA (node, community) labels, built once per session while
+    `session.share_subtrees` is on, else computed fresh — the
+    production shape: communities are detected once, then scored
+    (graph_modularity_lpa), joined and reported, not re-propagated per
+    consumer.  The registered LPA query itself always computes fresh
+    so its own bench timing stays honest."""
+    return shared(
+        spark,
+        sf_dir,
+        "lpa_labels",
+        lambda: graph_label_propagation(spark, sf_dir),
+    )
 
 
 def hb_register_rounds(
@@ -1870,14 +1820,18 @@ def hb_register_rounds(
 def shared_hb_registers(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, list[DataFrame]]:
-    """Per-session-cached :func:`hb_register_rounds` when the bench
-    cache is on, else computed fresh."""
-    if not _SHARED_HB_ON:
-        return hb_register_rounds(spark, sf_dir)
-    key = (id(spark), sf_dir)
-    if key not in _SHARED_HB:
-        _SHARED_HB[key] = hb_register_rounds(spark, sf_dir)
-    return _SHARED_HB[key]
+    """:func:`hb_register_rounds`, built once per session while
+    `session.share_subtrees` is on, else computed fresh: the whole
+    family — graph_anf_hll_eval, graph_effective_diameter,
+    graph_harmonic_centrality_sketch and the bounded truth query —
+    then derives every statistic from one set of register checkpoints
+    (VERDICT r6 #4)."""
+    return shared(
+        spark,
+        sf_dir,
+        "hb_registers",
+        lambda: hb_register_rounds(spark, sf_dir),
+    )
 
 
 def _anf_hll_oracle() -> str:

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..functions import vectors
 from ..registry import register, register_probe
+from ..session import shared
 from ..sources.tables import bind, fanout, table
 
 _DIM = 64
@@ -693,47 +694,21 @@ def sim_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.select("vec_id", assign_expr(centroids))
 
 
-#: (session id, sf_dir) -> k-means (vec_id, cluster) assignment.
-_SHARED_KM: dict[tuple[int, str], DataFrame] = {}
-_SHARED_KM_ON = False
-
-
-def enable_shared_kmeans_cache(on: bool = True) -> None:
-    """Opt a long-lived session (bench.py owns one) into running
-    Lloyd's iterations ONCE per (session, sf_dir) and serving the
-    assignment to downstream consumers (SemDeDup dedups within the
-    clusters those iterations produce) from the checkpoint — the
-    production shape: a curation pipeline clusters the embedding
-    space once, then every cluster-scoped stage reads the assignment.
-    OFF by default: the correctness gate and the scaling sweeps must
-    execute each query's full tree (same contract as the pairs /
-    HyperBall / LPA caches)."""
-    global _SHARED_KM_ON
-    _SHARED_KM_ON = on
-    if not on:
-        # Release the checkpoint blocks, not just the dict refs
-        # (ADVICE r7: toggling off used to leak them for the session).
-        from ..session import free_local_checkpoint
-
-        free_local_checkpoint(_SHARED_KM)
-        _SHARED_KM.clear()
-
-
 def shared_kmeans_assignment(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The (vec_id, cluster) k-means assignment, per-session-cached
-    when the bench cache is on, else computed fresh.  The registered
-    k-means query itself always computes fresh so its own bench
-    timing stays honest."""
-    if not _SHARED_KM_ON:
-        return sim_kmeans_clusters(spark, sf_dir)
-    key = (id(spark), sf_dir)
-    if key not in _SHARED_KM:
-        _SHARED_KM[key] = sim_kmeans_clusters(
-            spark, sf_dir
-        ).localCheckpoint(eager=True)
-    return _SHARED_KM[key]
+    """The (vec_id, cluster) k-means assignment, built once per session
+    while `session.share_subtrees` is on, else computed fresh — the
+    production shape: a curation pipeline clusters the embedding space
+    once, then every cluster-scoped stage (SemDeDup) reads the
+    assignment.  The registered k-means query itself always computes
+    fresh so its own bench timing stays honest."""
+    return shared(
+        spark,
+        sf_dir,
+        "kmeans_assignment",
+        lambda: sim_kmeans_clusters(spark, sf_dir),
+    )
 
 
 def _semdedup_oracle(threshold: float = 0.95) -> str:

@@ -72,11 +72,14 @@ def test_heavy_queries_have_curves():
     still participates through a hysteresis band: anything above 3.0 s
     there (beyond the observed noise envelope around the 1.5 s line)
     needs a curve too, so a genuinely new heavy query cannot hide
-    between closes.  tools/scaling_curves.py derives its default query
-    set from the same artifacts, so closing a gap is one sweep run."""
+    between closes; one at 1.5-3.0 s there with no curve raises a
+    warning naming it.  tools/scaling_curves.py derives its default
+    query set from the same artifacts, so closing a gap is one sweep
+    run."""
     import glob
     import json
     import os
+    import warnings
 
     from fortisiem_clickhouse_monitor_spark.testing import (
         close_bench_artifact,
@@ -86,6 +89,7 @@ def test_heavy_queries_have_curves():
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     registered = set(entrymod.queries())
     heavy: set[str] = set()
+    band: set[str] = set()
     close_path = close_bench_artifact(repo)
     latest_path = latest_bench_artifact(repo)
     if close_path is None and latest_path is None:
@@ -95,11 +99,20 @@ def test_heavy_queries_have_curves():
             continue
         bench = json.load(open(path))["queries"]
         heavy |= {k for k, v in bench.items() if v > threshold and k in registered}
+        if path == latest_path:
+            band = {k for k, v in bench.items() if v > 1.5 and k in registered}
     covered = set()
     for p in glob.glob(os.path.join(repo, "docs", "scaling_curves_*.json")):
         for name, entry in json.load(open(p)).items():
             if len(entry.get("times", {})) >= 3:
                 covered.add(name)
+    # Inside the hysteresis band of the fresh artifact: not a failure
+    # (host noise), but not silent either.
+    for name in sorted(band - heavy - covered):
+        warnings.warn(
+            f"{name}: over 1.5 s in the fresh bench artifact with no "
+            "scaling curve"
+        )
     missing = sorted(heavy - covered)
     assert not missing, (
         f"heavy queries with no scaling curve (run tools/scaling_curves.py "

@@ -43,24 +43,26 @@ def test_free_local_checkpoint_tolerates_non_checkpoints(spark):
 
 
 def test_cache_toggle_off_releases_checkpoints(spark):
-    """enable_shared_*_cache(False) must unpersist the cached entries'
+    """share_subtrees(False) must unpersist the memoized entries'
     checkpoint blocks (ADVICE r7: they leaked for the session).  Uses
-    the k-means cache — the cheapest of the four — against sf0.001."""
+    the k-means assignment — the cheapest shared subtree — against
+    sf0.001."""
+    from fortisiem_clickhouse_monitor_spark import session
     from fortisiem_clickhouse_monitor_spark.operators import similarity as sim
 
     base = _n_persistent(spark)
-    sim.enable_shared_kmeans_cache(True)
+    session.share_subtrees(True)
     try:
         sim.shared_kmeans_assignment(spark, SF_SMALL).count()
         populated = _n_persistent(spark)
         assert populated > base
     finally:
-        sim.enable_shared_kmeans_cache(False)
-    # Exactly the cache's own checkpoint is released; any blocks the
+        session.share_subtrees(False)
+    # Exactly the memo's own checkpoint is released; any blocks the
     # kmeans computation checkpoints internally follow per-call
-    # lifecycle and are not the toggle's to free.
+    # lifecycle and are not the switch's to free.
     assert _n_persistent(spark) == populated - 1
-    assert not sim._SHARED_KM
+    assert not session._SUBTREES
 
 
 def test_union_find_empty_and_pandas_return_path(spark):

@@ -26,54 +26,28 @@ from fortisiem_clickhouse_monitor_spark.session import get_spark  # noqa: E402
 
 
 def _lpa_round(spark, sf_dir):
-    from fortisiem_clickhouse_monitor_spark.operators.graph import (
-        _SUPP_OFF,
-        graph_label_propagation,
-    )
+    from fortisiem_clickhouse_monitor_spark.operators.graph import _SUPP_OFF
     from fortisiem_clickhouse_monitor_spark.sources.tables import table
-
-    import inspect
 
     li = table(spark, sf_dir, "lineitem")
     e0 = li.select(
         F.col("l_partkey").alias("u"),
         (F.col("l_suppkey") + _SUPP_OFF).alias("v"),
     ).distinct()
-    # Mirror the INSTALLED query's shape: the r9 tree co-partitions the
-    # edge checkpoint and drops the per-round repartition; the r8 tree
-    # checkpoints unpartitioned and repartitions inside each round.
-    copart = "CLUSTER by the vote key" in inspect.getsource(
-        graph_label_propagation
+    # Mirror graph_label_propagation: the edge checkpoint is clustered
+    # by the vote key, so the round needs no per-round repartition.
+    edges = (
+        e0.unionByName(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        .repartition("v")
+        .localCheckpoint()
     )
-    edges = e0.unionByName(
-        e0.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    if copart:
-        edges = edges.repartition("v")
-    edges = edges.localCheckpoint()
     labels = edges.select(F.col("u").alias("node")).distinct().select(
         "node", F.col("node").alias("lbl")
     )
     votes = edges.join(
         F.broadcast(labels.withColumnRenamed("node", "u")), "u"
     )
-    if not copart:
-        # r8 shape: pinned full-|E| exchange + two-stage argmax.
-        votes = votes.repartition("v")
-        counted = votes.groupBy(F.col("v").alias("node"), "lbl").agg(
-            F.count(F.lit(1)).alias("c")
-        )
-        return (
-            counted.groupBy("node")
-            .agg(
-                F.max(
-                    F.struct(F.col("c"), (-F.col("lbl")).alias("neg"))
-                ).alias("m")
-            )
-            .select("node", (-F.col("m.neg")).alias("lbl"))
-        )
-    # r9 shape: single deterministic-mode aggregate over the
-    # v-clustered checkpoint.
+    # Single deterministic-mode aggregate over the v-clustered checkpoint.
     return votes.groupBy(F.col("v").alias("node")).agg(
         F.expr("mode(lbl, true)").alias("lbl")
     )
@@ -96,14 +70,9 @@ def _pagerank_round(spark, sf_dir):
     )
     deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     ed = edges.join(F.broadcast(deg), "u")
-    # Mirror pagerank_int's checkpoint shape for the tree under test.
-    import inspect
-
-    from fortisiem_clickhouse_monitor_spark.operators import graph as G
-
-    if 'repartition("v")' in inspect.getsource(G.pagerank_int):
-        ed = ed.repartition("v")
-    ed = ed.localCheckpoint(eager=True)
+    # Mirror pagerank_int: the checkpoint is clustered by the
+    # contribution key.
+    ed = ed.repartition("v").localCheckpoint(eager=True)
     ranks = ed.select("u").distinct().select(
         F.col("u").alias("node"), F.lit(_PR_SCALE).cast("long").alias("pr")
     )

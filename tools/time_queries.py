@@ -5,10 +5,10 @@ sf0.1) with one warmup pass then best-of-3, using the same noop-sink
 materialization as bench.py — for iterating on a single query's plan
 without paying a full-registry bench run.
 
-``--caches`` as the first arg enables the same four session caches
-bench.py enables (shared pairs / HyperBall / LPA / k-means), so a query
-that rides a shared subtree in the bench is timed under the bench's
-conditions instead of paying the full fresh subtree here.
+``--caches`` as the first arg turns on the session-shared subtrees as
+bench.py does (``session.share_subtrees``), so a query that rides a
+shared subtree in the bench is timed under the bench's conditions
+instead of paying the full fresh subtree here.
 """
 
 from __future__ import annotations
@@ -20,7 +20,10 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
-from fortisiem_clickhouse_monitor_spark.session import get_spark  # noqa: E402
+from fortisiem_clickhouse_monitor_spark.session import (  # noqa: E402
+    get_spark,
+    share_subtrees,
+)
 
 
 def materialize(df) -> None:
@@ -36,21 +39,9 @@ def main() -> None:
     spark = get_spark("fcm-time")
     if names and names[0] == "--caches":
         names = names[1:]
-        from fortisiem_clickhouse_monitor_spark.operators.dedup import (
-            enable_shared_pairs_cache,
-        )
-        from fortisiem_clickhouse_monitor_spark.operators.graph import (
-            enable_shared_hb_cache,
-            enable_shared_lpa_cache,
-        )
-        from fortisiem_clickhouse_monitor_spark.operators.similarity import (
-            enable_shared_kmeans_cache,
-        )
-
-        enable_shared_pairs_cache(True)
-        enable_shared_hb_cache(True)
-        enable_shared_lpa_cache(True)
-        enable_shared_kmeans_cache(True)
+        # bench.py's production shape (build each shared subtree once,
+        # fan out); correctness gates and sweeps never turn it on.
+        share_subtrees(True)
     qs = entrymod.queries()
     for name in names:
         materialize(qs[name](spark, sf_dir))  # warmup
