@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..functions import textfns
 from ..registry import register
+from ..sources.fixtures import local_df
 from ..sources.tables import bind, fanout, spread, table
 
 # DuckDB twin of textfns.tokens()
@@ -1576,8 +1577,8 @@ def corpus_doremi_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         if tot == 0:  # same degenerate-input guard as above
             break
         wts = {s: tdiv(raw[s] * _DOREMI_SCALE, tot) for s in means}
-    w = spark.createDataFrame(
-        [(s, wts[s]) for s in sorted(wts)], "source string, weight long"
+    w = local_df(
+        spark, [(s, wts[s]) for s in sorted(wts)], "source string, weight long"
     )
     return (
         doms.join(F.broadcast(w), "source")

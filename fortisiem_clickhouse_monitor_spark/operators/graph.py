@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register, register_probe
 from ..session import shared
+from ..sources.fixtures import local_df
 from ..sources.tables import table
 
 _PR_ITERS = 6
@@ -2712,7 +2713,7 @@ def graph_rich_club_coefficient(
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("d"))
     )
-    ks = spark.createDataFrame([(k,) for k in _RICH_KS], "k int")
+    ks = local_df(spark, [(k,) for k in _RICH_KS], "k int")
     club = (
         ks.join(deg, deg["d"] > ks["k"])
         .groupBy("k")

@@ -91,9 +91,7 @@ def join_disjunctive_first_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     lrt = fixtures.spark_df(spark, "lrt")
     key = F.concat(F.lit("sup-"), F.col("s_suppkey").cast("string"))
     joined = s.join(
-        F.broadcast(lrt),
-        (lrt["device_ip"] == key) | (lrt["relay"] == key),
-        "left",
+        lrt, (lrt["device_ip"] == key) | (lrt["relay"] == key), "left"
     )
     w = Window.partitionBy("s_suppkey").orderBy(F.col("lrt_key").asc_nulls_last())
     return (

@@ -161,7 +161,7 @@ def nest_two_level_shard_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     topo = fixtures.spark_df(spark, "topology")
     nodes = (
-        r.join(F.broadcast(topo), "node_ip", "left")
+        r.join(topo, "node_ip", "left")
         .select(
             F.coalesce(F.col("shard_name"), F.lit("Unknown Shard")).alias("shard"),
             "node_ip",

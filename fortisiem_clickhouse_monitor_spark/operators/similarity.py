@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from ..functions import vectors
 from ..registry import register, register_probe
 from ..session import shared
+from ..sources.fixtures import local_df
 from ..sources.tables import bind, fanout, table
 
 _DIM = 64
@@ -3052,9 +3053,7 @@ def sim_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 best = (score, c)
         picked.append(best[1])
         out.append((rank, best[1], simq_by_id[best[1]], best[0]))
-    res = spark.createDataFrame(
-        out, "rank int, vec_id long, simq double, raw_score double"
-    )
+    res = local_df(spark, out, "rank int, vec_id long, simq double, raw_score double")
     return res.select(
         "rank", "vec_id", "simq", F.round("raw_score", 6).alias("mmr_score")
     )
@@ -3178,9 +3177,7 @@ def sim_kcenter_farthest_points(
         out.append((rank, nxt["vec_id"], nxt["fsim"]))
         center = list(nxt["embedding"])
         state = state.filter(F.col("vec_id") != nxt["vec_id"])
-    return spark.createDataFrame(
-        out, "rank int, vec_id long, max_sim_to_selected double"
-    )
+    return local_df(spark, out, "rank int, vec_id long, max_sim_to_selected double")
 
 
 @register_probe("sim_kcenter_farthest_points")

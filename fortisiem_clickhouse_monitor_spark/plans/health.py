@@ -48,11 +48,11 @@ def _enriched_replicas(spark: SparkSession) -> DataFrame:
     scrub = lambda c: F.when(F.col(c) == SENTINEL, None).otherwise(F.col(c))  # noqa: E731
     empty_null = lambda c: F.when(F.col(c) == "", None).otherwise(F.col(c))  # noqa: E731
     return (
-        r.join(F.broadcast(dns), r["node_ip"] == dns["ip"], "left")
+        r.join(dns, r["node_ip"] == dns["ip"], "left")
         .drop("ip")
-        .join(F.broadcast(lrt_first), r["node_ip"] == lrt_first["ip"], "left")
+        .join(lrt_first, r["node_ip"] == lrt_first["ip"], "left")
         .drop("ip")
-        .join(F.broadcast(topo), "node_ip", "left")
+        .join(topo, "node_ip", "left")
         .select(
             F.coalesce(F.col("shard_name"), F.lit("Unknown Shard")).alias("shard"),
             F.coalesce(F.col("hostname"), F.col("lrt_name")).alias("device_name"),
@@ -133,7 +133,7 @@ def health_replica_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return enriched.join(
-        F.broadcast(act),
+        act,
         (enriched["device_ip"] == act["node_ip"])
         & (enriched["db_table"] == act["tbl"]),
         "left",
@@ -182,7 +182,7 @@ def health_nested_document(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("total_replicas") != 0,
         F.floor(100.0 * F.col("active_replicas") / F.col("total_replicas")),
     ).otherwise(0).cast("int")
-    base = r.join(F.broadcast(topo), "node_ip", "left").select(
+    base = r.join(topo, "node_ip", "left").select(
         F.coalesce(F.col("shard_name"), F.lit("Unknown Shard")).alias("shard"),
         "node_ip",
         "tbl",

@@ -3,19 +3,24 @@ pipelines (FIXTURES.md §B), shared between the Spark queries and their
 DuckDB oracles.
 
 Each fixture is a literal list of rows. ``spark_df`` materializes it as
-a DataFrame with an explicit schema; ``values_sql`` renders the same
-rows as a DuckDB ``(VALUES ...) AS t(cols)`` relation so oracle SQL can
-embed byte-identical data. This keeps fixture-driven operators fully
+a DataFrame with an explicit schema, built through ``local_df`` as an
+Arrow-backed ``LocalRelation``; ``values_sql`` renders the same rows as a
+DuckDB ``(VALUES ...) AS t(cols)`` relation so oracle SQL can embed
+byte-identical data. This keeps fixture-driven operators fully
 hash-checkable without writing anything outside the repo.
 
 In production these would be real sources (ClickHouse system tables over
-JDBC, Redis topology snapshots — chStats.py:79, 531-533); as small
-dimensions they are always broadcast-joined.
+JDBC, Redis topology snapshots — chStats.py:79, 531-533). A
+``LocalRelation`` carries its exact size, so the planner broadcasts
+these small dimensions on its own, without a hint.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 # --- B4: cluster topology (Redis clickhouseConfig, chStats.py:72-75) ----
 # Node 10.0.3.1 is intentionally absent -> 'Unknown Shard' default path.
@@ -204,9 +209,26 @@ _ALL = {
 }
 
 
+def local_df(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """``rows`` (tuples in ``ddl`` column order) as a DataFrame over a
+    JVM ``LocalRelation``.
+
+    ``createDataFrame`` on a Python list builds a ``LogicalRDD`` instead:
+    every scan of it runs a Python worker to unpickle the rows, and its
+    default size statistics keep Catalyst from folding filters and
+    projections into it or sizing it for a join.  A ``pyarrow.Table``
+    goes to the JVM once and plans as a ``LocalTableScan``."""
+    schema = StructType.fromDDL(ddl)
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(arrow.names, r)) for r in rows], schema=arrow
+    )
+    return spark.createDataFrame(table, schema=schema)
+
+
 def spark_df(spark: SparkSession, name: str) -> DataFrame:
     cols, rows = _ALL[name]
-    return spark.createDataFrame(rows, schema=cols)
+    return local_df(spark, rows, cols)
 
 
 def _sql_lit(v) -> str:

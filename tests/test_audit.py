@@ -128,3 +128,37 @@ def test_work_probes_reference_registered_queries():
 
     unknown = sorted(set(work_probes()) - set(entrymod.queries()))
     assert not unknown, f"probes without a registered query: {unknown}"
+
+
+#: ``createDataFrame`` calls allowed in the package outside
+#: sources/fixtures.py, by file and source line, with the reason.
+_CREATE_DF_ALLOWED = {
+    ("operators/dedup.py", "return spark.createDataFrame([], schema=E.schema), 0"):
+        "empty result of the driver-side union-find path",
+    ("operators/dedup.py", "return spark.createDataFrame(stars, schema=E.schema), 0"):
+        "pandas return of the driver-side union-find path: already goes "
+        "through Arrow and can hold ~2M rows",
+}
+
+
+def test_no_list_built_dataframes():
+    """A ``createDataFrame`` on a Python list plans as a ``LogicalRDD``:
+    every scan runs a Python worker to unpickle its rows, and Catalyst
+    can neither fold it nor size it for a join.  Small literal relations
+    go through ``fixtures.local_df`` (an Arrow-backed LocalRelation)."""
+    import pathlib
+
+    import fortisiem_clickhouse_monitor_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "sources/fixtures.py":
+            continue
+        for no, line in enumerate(path.read_text().splitlines(), 1):
+            code = line.strip()
+            if "createDataFrame(" in code and not code.startswith("#"):
+                if (rel, code) not in _CREATE_DF_ALLOWED:
+                    found.append(f"{rel}:{no}: {code}")
+    assert not found, "use fixtures.local_df instead:\n" + "\n".join(found)
