@@ -6,10 +6,10 @@
 - upload: add ``-U`` to emit ``PH_SYSTEM_<TYPE>=<json>`` frames instead
   — printed by default, sent as UDP datagrams with ``--udp`` (entry
   point A with uploadEvents, chStats.py:736, 384-483);
-- daemon: ``--daemon`` starts one Structured Streaming job per mode at
-  the reference cadences (entry point B, chStats.py:560-579);
-  ``--interval`` / ``--ticks`` shrink cadence and lifetime for
-  local runs.
+- daemon: ``--daemon`` runs one ``streaming.jobs.monitoring_job`` per
+  mode at the reference cadences (entry point B, chStats.py:560-579),
+  printing frames or sending them with ``--udp``; ``--interval`` /
+  ``--ticks`` shrink cadence and lifetime for local runs.
 
 Mode names resolve case-insensitively (chStats.py:703-713).
 """
@@ -65,59 +65,57 @@ def one_shot(spark, mode: str, sf_dir: str, upload: bool, udp: bool) -> list[str
     return out
 
 
+def print_frames(frames: list[str]) -> None:
+    # one write per tick: the five jobs' ticks print from separate threads
+    print("".join(f"{f}\n" for f in frames), end="", flush=True)
+
+
 def run_daemon(
     spark,
     sf_dir: str,
     interval_seconds: int | None,
     ticks: int,
-    sink=None,
+    sink=print_frames,
 ) -> int:
-    """Start all five jobs as streaming queries over the events stream
-    snapshotting each mode's frame per micro-batch; returns the number
-    of frames emitted. `sink` (tests) collects frames instead of UDP."""
+    """Run each mode's `jobs.monitoring_job` every `interval_seconds` (or
+    at its reference cadence) for `ticks` ticks, sending each tick's
+    frames to `sink`; returns the number of frames emitted."""
     import time
 
     from . import registry
     from .streaming import jobs
 
-    frames: list[str] = []
-    collect = sink or frames.extend
-    queries = []
-    for mode, (qname, ptype) in MODES.items():
-        snapshot = registry.queries()[qname](spark, sf_dir)
-        # periodic re-emission: a rate stream provides the trigger beat;
-        # the job re-runs the batch frame inside foreachBatch each tick
-        # (the reference recomputes per tick too, chStats.py:538-549).
-        beat = (
-            spark.readStream.format("rate").option("rowsPerSecond", 1).load()
-        )
+    counts: list[int] = []  # list.append is atomic across the jobs' threads
 
-        def emit(batch_df, batch_id, _df=snapshot, _pt=ptype):
-            rows = jobs.frame_syslog(_df, _pt).collect()
-            collect([r["frame"] for r in rows])
+    def emit(frames: list[str]) -> None:
+        sink(frames)
+        counts.append(len(frames))
 
-        iv = interval_seconds or jobs.JOB_INTERVALS.get(
-            "data_health" if "Health" in mode else "keeper_stats", 180
+    intervals = {m: interval_seconds or jobs.JOB_INTERVALS[m] for m in MODES}
+    queries = [
+        jobs.monitoring_job(
+            registry.queries()[qname](spark, sf_dir),
+            ptype,
+            emit,
+            interval_seconds=intervals[mode],
+            query_name=f"daemon_{mode}",
         )
-        q = (
-            beat.writeStream.outputMode("append")
-            .foreachBatch(emit)
-            .trigger(processingTime=f"{iv} seconds")
-            .queryName(f"daemon_{mode}")
-            .start()
-        )
-        queries.append(q)
-
-    deadline = time.time() + ticks * (interval_seconds or 180) + 30
+        for mode, (qname, ptype) in MODES.items()
+    ]
+    deadline = time.monotonic() + ticks * max(intervals.values()) + 30
     try:
-        while time.time() < deadline and any(q.isActive for q in queries):
-            time.sleep(0.5)
-            if sink is None and len(frames) > 0:
-                break
+        while time.monotonic() < deadline and any(q.isActive for q in queries):
+            time.sleep(0.1)
+            for q in queries:
+                last = q.isActive and q.lastProgress
+                done = last and last["batchId"] + 1 >= ticks
+                # stop between ticks: stopping mid-batch kills the stream thread
+                if done and not q.status["isTriggerActive"]:
+                    q.stop()
     finally:
         for q in queries:
             q.stop()
-    return len(frames)
+    return sum(counts)
 
 
 #: Remediation tasks section of the menu. The reference's own tasks
@@ -174,7 +172,10 @@ def main(argv: list[str] | None = None) -> None:
 
     spark = get_spark("fcm-cli")
     if args.daemon:
-        n = run_daemon(spark, args.sf_dir, args.interval, args.ticks)
+        from .streaming import jobs
+
+        sink = jobs.udp_sink() if args.udp else print_frames
+        n = run_daemon(spark, args.sf_dir, args.interval, args.ticks, sink)
         print(f"daemon emitted {n} frames")
     elif args.mode:
         one_shot(spark, resolve_mode(args.mode), args.sf_dir, args.upload, args.udp)

@@ -4,13 +4,13 @@ gating, per-tick fault isolation, UDP fan-out (chStats.py:538-579) —
 re-expressed as StreamingQuery definitions.
 
 Design mapping:
-- T1 fixed-interval trigger  -> trigger(processingTime=...)
+- T1 fixed-interval trigger  -> rate-stream beat, trigger(processingTime=...)
 - T2 leader-gated execution  -> predicate checked inside foreachBatch
 - T3 per-tick fault isolation-> try/except inside foreachBatch
 - T4 config hot-reload       -> dimension re-read per micro-batch
 - T5 at-most-once UDP sink   -> foreachBatch writer over the framed
-                                PH_SYSTEM_* lines (S7); tests swap in a
-                                collecting sink.
+                                PH_SYSTEM_* lines (S7): printed, or UDP
+                                with ``--udp``; tests collect them.
 
 Extended (north-star) event-time operators live here too, in their
 *streaming* form: tumbling/sliding/session windows with watermarks and
@@ -29,13 +29,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-#: Reference job cadences (chStats.py:667-673), seconds.
+#: Reference job cadences (chStats.py:667-673) per mode, seconds.
 JOB_INTERVALS = {
-    "data_health": 180,
-    "data_replication_health": 180,
-    "keeper_health": 180,
-    "keeper_stats": 300,
-    "keeper_params": 1800,
+    "dataHealth": 180,
+    "dataReplicationHealth": 180,
+    "keeperHealth": 180,
+    "keeperStats": 300,
+    "keeperParams": 1800,
 }
 
 EVENTS_SCHEMA = (
@@ -75,31 +75,28 @@ def monitoring_job(
     *,
     interval_seconds: int = 180,
     is_leader: Callable[[], bool] = lambda: True,
-    checkpoint_dir: str | None = None,
     query_name: str | None = None,
 ) -> StreamingQuery:
     """One reference daemon job (chStats.py:538-549): periodic trigger,
     leader gate, fault-isolated emission of framed syslog lines.
 
-    `sink` receives the batch's framed lines (production: UDP datagrams
-    to localhost:514, fire-and-forget; tests: an in-memory list)."""
-    framed = frame_syslog(df, payload_type)
+    A `rate` stream beats; each tick re-frames the batch snapshot `df`,
+    as the reference recomputes per tick (chStats.py:544). `sink`
+    receives the tick's framed lines (production: UDP datagrams to
+    localhost:514, fire-and-forget; tests: an in-memory list)."""
+    beat = df.sparkSession.readStream.format("rate").option("rowsPerSecond", 1).load()
 
-    def emit(batch_df: DataFrame, batch_id: int) -> None:
+    def emit(_beat: DataFrame, batch_id: int) -> None:
         try:
             if not is_leader():  # T2: only the Supervisor leader uploads
                 return
-            sink([r["frame"] for r in batch_df.collect()])
+            sink([r["frame"] for r in frame_syslog(df, payload_type).collect()])
         except Exception as exc:  # noqa: BLE001  (T3: log-and-continue)
             print(f"[monitoring_job {payload_type}] tick {batch_id} failed: {exc}")
 
-    writer = (
-        framed.writeStream.outputMode("append")
-        .foreachBatch(emit)
-        .trigger(processingTime=f"{interval_seconds} seconds")
+    writer = beat.writeStream.foreachBatch(emit).trigger(
+        processingTime=f"{interval_seconds} seconds"
     )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
     if query_name:
         writer = writer.queryName(query_name)
     return writer.start()

@@ -40,10 +40,22 @@ def test_daemon_emits_all_modes(spark):
     n = cli.run_daemon(
         spark, SF_SMALL, interval_seconds=1, ticks=3, sink=collected.extend
     )
-    assert n == 0  # internal counter unused when a sink is injected
+    assert n == len(collected)
     types = {f.split("=", 1)[0] for f in collected}
     expected = {f"PH_SYSTEM_{t}" for _, t in cli.MODES.values()}
     assert types == expected
+
+
+def test_daemon_cli_prints_frames(spark, capsys):
+    """Without --udp the daemon prints every frame, one per line, and
+    its closing count equals the frames printed."""
+    cli.main(["--daemon", "--interval", "1", "--ticks", "2", "--sf-dir", SF_SMALL])
+    lines = capsys.readouterr().out.splitlines()
+    frames = [ln for ln in lines if ln.startswith("PH_SYSTEM_")]
+    assert {f.split("=", 1)[0] for f in frames} == {
+        f"PH_SYSTEM_{t}" for _, t in cli.MODES.values()
+    }
+    assert lines[-1] == f"daemon emitted {len(frames)} frames"
 
 
 def test_interactive_menu_runs_selected_job(spark, capsys):

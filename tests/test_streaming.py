@@ -118,13 +118,13 @@ def test_streaming_dedup_bounded(spark, tmp_path_factory):
     assert out.count() == ev.select("event_id").distinct().count()
 
 
-def test_monitoring_job_leader_gate_and_frames(spark, events_dir):
-    """T1/T2/T3/T5: frames arrive once per trigger, only when leader."""
+def test_monitoring_job_leader_gate_and_frames(spark):
+    """T1/T2/T5: frames arrive once per trigger, only when leader."""
     collected: list[str] = []
     leader = {"v": True}
     # Reference ticks are stateless snapshots (chStats.py:544): project +
     # frame + fan out, no streaming state.
-    snapshot = jobs.events_stream(spark, events_dir).select(
+    snapshot = table(spark, SF_SMALL, "events").select(
         "event_id", "event_type", "value"
     )
 
@@ -140,8 +140,7 @@ def test_monitoring_job_leader_gate_and_frames(spark, events_dir):
         # we wait for the first tick then stop.
         deadline = time.time() + 120
         while not q.recentProgress and time.time() < deadline:
-            time.sleep(0.5)
-        q.processAllAvailable()
+            time.sleep(0.1)
         q.stop()
 
     run_once()
@@ -152,6 +151,55 @@ def test_monitoring_job_leader_gate_and_frames(spark, events_dir):
     leader["v"] = False
     run_once()
     assert collected == [], "non-leader tick must emit nothing"
+
+
+def test_monitoring_job_failing_tick_keeps_running(spark, capsys):
+    """T3: a tick whose snapshot raises at execution is logged, and the
+    job stays active and ticks again; a healthy job beside it keeps
+    emitting."""
+    failing = spark.range(1).select(
+        F.raise_error(F.format_string("forced failure %d", "id"))
+    )
+    failed_frames: list[str] = []
+    healthy_ticks: list[list[str]] = []
+    bad = jobs.monitoring_job(
+        failing, "FAILING", failed_frames.extend, interval_seconds=1
+    )
+    good = jobs.monitoring_job(
+        table(spark, SF_SMALL, "events").select("event_id"),
+        "HEALTHY",
+        healthy_ticks.append,
+        interval_seconds=1,
+    )
+    try:
+        deadline = time.time() + 120
+        while time.time() < deadline and (
+            len(bad.recentProgress) < 2 or len(healthy_ticks) < 2
+        ):
+            time.sleep(0.1)
+        assert bad.isActive and bad.exception() is None
+        assert len(bad.recentProgress) >= 2, "failing job must tick again"
+    finally:
+        bad.stop()
+        good.stop()
+    assert failed_frames == []
+    assert len(healthy_ticks) >= 2 and all(healthy_ticks)
+    out = capsys.readouterr().out
+    assert out.count("[monitoring_job FAILING] tick") >= 2
+    assert "forced failure 0" in out
+
+
+def test_job_intervals_follow_reference_cadences():
+    from fortisiem_clickhouse_monitor_spark.__main__ import MODES
+
+    assert set(jobs.JOB_INTERVALS) == set(MODES)
+    assert jobs.JOB_INTERVALS == {
+        "dataHealth": 180,
+        "dataReplicationHealth": 180,
+        "keeperHealth": 180,
+        "keeperStats": 300,
+        "keeperParams": 1800,
+    }
 
 
 def test_refreshing_config_caches_and_expires():
@@ -262,52 +310,46 @@ def test_concurrent_daemon_cadence_headroom(spark):
     """VERDICT r3 #6 / BASELINE streaming bar: all five reference-
     cadence jobs running CONCURRENTLY against sf0.1 must finish each
     tick far inside the tightest reference trigger interval (180 s,
-    chStats.py:667-673).  Each job's per-tick latency is measured as
-    the foreachBatch wall time of recomputing + framing its mode's
-    snapshot (exactly what run_daemon does per tick); asserted at
-    <= 10% of the 180 s cadence budget with all five ticking at once."""
+    chStats.py:667-673).  The five jobs run through
+    `jobs.monitoring_job`, as the daemon runs them, and each tick's
+    latency is its `addBatch` duration (recompute + frame + sink);
+    asserted at <= 10% of the 180 s cadence budget with all five
+    ticking at once."""
     from fortisiem_clickhouse_monitor_spark.__main__ import MODES
     from fortisiem_clickhouse_monitor_spark import registry
 
     sf01 = "/root/testdata/sf0.1"
-    tick_secs: dict[str, list[float]] = {m: [] for m in MODES}
-    queries = []
+    ticks: dict[str, list[list[str]]] = {m: [] for m in MODES}
+    queries = {}
     try:
         for mode, (qname, ptype) in MODES.items():
-            snapshot = registry.queries()[qname](spark, sf01)
-            beat = (
-                spark.readStream.format("rate")
-                .option("rowsPerSecond", 1)
-                .load()
+            queries[mode] = jobs.monitoring_job(
+                registry.queries()[qname](spark, sf01),
+                ptype,
+                ticks[mode].append,
+                interval_seconds=2,
+                query_name=f"cadence_{mode}",
             )
-
-            def emit(batch_df, batch_id, _df=snapshot, _pt=ptype, _m=mode):
-                t0 = time.time()
-                rows = jobs.frame_syslog(_df, _pt).collect()
-                assert rows and all(
-                    r["frame"].startswith(f"PH_SYSTEM_{_pt}=") for r in rows
-                )
-                tick_secs[_m].append(time.time() - t0)
-
-            q = (
-                beat.writeStream.outputMode("append")
-                .foreachBatch(emit)
-                .trigger(processingTime="2 seconds")
-                .queryName(f"cadence_{mode}")
-                .start()
-            )
-            queries.append(q)
 
         deadline = time.time() + 240
         while time.time() < deadline and not all(
-            len(v) >= 2 for v in tick_secs.values()
+            len(q.recentProgress) >= 2 for q in queries.values()
         ):
             time.sleep(0.5)
     finally:
-        for q in queries:
+        for q in queries.values():
             q.stop()
 
-    budget = jobs.JOB_INTERVALS["data_health"]  # 180 s, the tightest
+    tick_secs = {
+        m: [p["durationMs"]["addBatch"] / 1000 for p in q.recentProgress]
+        for m, q in queries.items()
+    }
+    for mode, (_, ptype) in MODES.items():
+        assert len(ticks[mode]) >= 2 and all(
+            rows and all(f.startswith(f"PH_SYSTEM_{ptype}=") for f in rows)
+            for rows in ticks[mode]
+        ), mode
+    budget = jobs.JOB_INTERVALS["dataHealth"]  # 180 s, the tightest
     assert all(len(v) >= 2 for v in tick_secs.values()), tick_secs
     if os.environ.get("SPARK_GRAFT_SKIP_PERF"):
         pytest.skip("SPARK_GRAFT_SKIP_PERF set: latency bound not asserted "
