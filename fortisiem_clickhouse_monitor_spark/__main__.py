@@ -78,18 +78,29 @@ def run_daemon(
     sink=print_frames,
 ) -> int:
     """Run each mode's `jobs.monitoring_job` every `interval_seconds` (or
-    at its reference cadence) for `ticks` ticks, sending each tick's
-    frames to `sink`; returns the number of frames emitted."""
+    at its reference cadence) for exactly `ticks` ticks, sending each
+    tick's frames to `sink`; returns the number of frames emitted."""
     import time
+    from functools import partial
 
     from . import registry
     from .streaming import jobs
 
     counts: list[int] = []  # list.append is atomic across the jobs' threads
+    # ticks each job has begun; an entry is written only by its own job's
+    # stream thread, which runs that job's ticks one at a time
+    started = dict.fromkeys(MODES, 0)
 
     def emit(frames: list[str]) -> None:
         sink(frames)
         counts.append(len(frames))
+
+    def admit(mode: str) -> bool:
+        # A tick past the budget runs no Spark job and ends at once, so the
+        # between-ticks stop below lands even when ticks overrun the
+        # interval and the triggers fire back to back.
+        started[mode] += 1
+        return started[mode] <= ticks
 
     intervals = {m: interval_seconds or jobs.JOB_INTERVALS[m] for m in MODES}
     queries = [
@@ -98,6 +109,7 @@ def run_daemon(
             ptype,
             emit,
             interval_seconds=intervals[mode],
+            is_leader=partial(admit, mode),
             query_name=f"daemon_{mode}",
         )
         for mode, (qname, ptype) in MODES.items()
@@ -106,9 +118,8 @@ def run_daemon(
     try:
         while time.monotonic() < deadline and any(q.isActive for q in queries):
             time.sleep(0.1)
-            for q in queries:
-                last = q.isActive and q.lastProgress
-                done = last and last["batchId"] + 1 >= ticks
+            for mode, q in zip(MODES, queries):
+                done = q.isActive and started[mode] >= ticks
                 # stop between ticks: stopping mid-batch kills the stream thread
                 if done and not q.status["isTriggerActive"]:
                     q.stop()

@@ -42,6 +42,30 @@ _SUPP_OFF = 10_000_000  # offsets supplier ids into a disjoint node range
 #: vs 4.5 GB shuffle + 22.5/8.4 GB mem/disk spill at 20x).
 TRUSS_BROADCAST_MAX_EDGES = 25_000_000
 
+#: DuckDB twin of ``_part_supplier_edges``: the ``e0`` CTE that opens
+#: every part<->supplier oracle.
+_PS_EDGES_SQL = f"""WITH e0 AS (
+      SELECT DISTINCT l_partkey AS u, l_suppkey + {_SUPP_OFF} AS v
+      FROM lineitem
+    )"""
+
+
+def _part_supplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct directed part -> supplier edges (u, v) from lineitem.
+    Suppliers are offset by ``_SUPP_OFF`` into a disjoint id range so
+    the bipartite node sets share one key column."""
+    return table(spark, sf_dir, "lineitem").select(
+        F.col("l_partkey").alias("u"),
+        (F.col("l_suppkey") + _SUPP_OFF).alias("v"),
+    ).distinct()
+
+
+def _undirected(edges: DataFrame) -> DataFrame:
+    """Both directions of a directed (u, v) edge list."""
+    return edges.unionByName(
+        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    )
+
 
 def _pagerank_oracle() -> str:
     rounds = []
@@ -60,10 +84,7 @@ def _pagerank_oracle() -> str:
         prev = f"r{k}"
     joined = ",\n    ".join(rounds)
     return f"""
-    WITH e0 AS (
-      SELECT DISTINCT l_partkey AS u, l_suppkey + {_SUPP_OFF} AS v
-      FROM lineitem
-    ),
+    {_PS_EDGES_SQL},
     edges AS (SELECT u, v FROM e0 UNION ALL SELECT v AS u, u AS v FROM e0),
     deg AS (SELECT u, count(*) AS d FROM edges GROUP BY u),
     r0 AS (SELECT u AS node, CAST({_PR_SCALE} AS BIGINT) AS pr FROM deg),
@@ -137,14 +158,7 @@ def graph_pagerank_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph from lineitem; top 20 nodes by rank. Suppliers are offset
     into a disjoint id range so the bipartite node sets can share one
     key column."""
-    li = table(spark, sf_dir, "lineitem")
-    e0 = li.select(
-        F.col("l_partkey").alias("u"),
-        (F.col("l_suppkey") + F.lit(_SUPP_OFF)).alias("v"),
-    ).distinct()
-    edges = e0.unionByName(
-        e0.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
+    edges = _undirected(_part_supplier_edges(spark, sf_dir))
     return pagerank_int(edges).orderBy(F.desc("pr"), "node").limit(20)
 
 
@@ -225,9 +239,8 @@ def graph_common_neighbors_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     sym = (
-        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-        .unionByName(
-            pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
+        _undirected(
+            pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
         )
         .repartition(2 * n_parts, "u")
         .localCheckpoint()
@@ -264,10 +277,8 @@ def capped_wedges(pairs: DataFrame, cap: int) -> DataFrame:
     oracle-checkable.  Wedge count is bounded by cap * sum(deg) =
     2 * cap * |E|: LINEAR in edges for fixed cap, vs the uncapped
     sum(deg^2) which a single boilerplate hub makes quadratic."""
-    sym = pairs.select(
-        F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
-    ).unionByName(
-        pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
+    sym = _undirected(
+        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
     )
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     kept = sym.join(
@@ -384,10 +395,7 @@ def _lpa_oracle() -> str:
         prev = f"l{k}"
     joined = ",\n    ".join(rounds)
     return f"""
-    WITH e0 AS (
-      SELECT DISTINCT l_partkey AS u, l_suppkey + {_SUPP_OFF} AS v
-      FROM lineitem
-    ),
+    {_PS_EDGES_SQL},
     edges AS (SELECT u, v FROM e0 UNION ALL SELECT v AS u, u AS v FROM e0),
     l0 AS (SELECT DISTINCT u AS node, u AS lbl FROM edges),
     {joined}
@@ -424,13 +432,8 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     plans/r09/graph_label_propagation_round_*.txt.)  At 100 TB the
     label table is node-cardinality (vertex-cut it or broadcast per
     round); the edge list never moves after its first partitioning."""
-    li = table(spark, sf_dir, "lineitem")
-    e0 = li.select(
-        F.col("l_partkey").alias("u"),
-        (F.col("l_suppkey") + _SUPP_OFF).alias("v"),
-    ).distinct()
     edges = (
-        e0.unionByName(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        _undirected(_part_supplier_edges(spark, sf_dir))
         # CLUSTER by the vote key ONCE (r9 opt round, guide §2.3
         # "aggregate before you shuffle"): with all of a node's
         # in-edges in one partition, each round's (v, lbl) partial
@@ -572,10 +575,8 @@ def graph_common_neighbors_sketch_eval(
         .select("doc_a", "doc_b")
         .localCheckpoint()
     )
-    sym = pairs.select(
-        F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
-    ).unionByName(
-        pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
+    sym = _undirected(
+        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
     )
     adj = sym.groupBy("u").agg(
         F.collect_list(F.col("v").cast("string")).alias("nb"),
@@ -700,9 +701,8 @@ def graph_kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pairs = shared_ngram_pairs(spark, sf_dir).select("doc_a", "doc_b")
     edges = (
-        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-        .unionByName(
-            pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
+        _undirected(
+            pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
         )
         .localCheckpoint()
     )
@@ -799,10 +799,8 @@ def graph_adamic_adar_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(2 * n_parts)
         .localCheckpoint()
     )
-    sym = pairs.select(
-        F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
-    ).unionByName(
-        pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
+    sym = _undirected(
+        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
     )
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     w = F.round(F.lit(_AA_SCALE) / F.log("d")).cast("long")
@@ -857,10 +855,8 @@ def _degree_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import shared_ngram_pairs
 
     pairs = shared_ngram_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    sym = pairs.select(
-        F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
-    ).unionByName(
-        pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
+    sym = _undirected(
+        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
     )
     return sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
 
@@ -894,10 +890,7 @@ def _probe_adamic_adar(spark: SparkSession, sf_dir: str) -> int:
 
 def _modularity_oracle() -> str:
     return f"""
-    WITH e0 AS (
-      SELECT DISTINCT l_partkey AS u, l_suppkey + {_SUPP_OFF} AS v
-      FROM lineitem
-    ),
+    {_PS_EDGES_SQL},
     labels AS (SELECT * FROM ({_lpa_oracle()})),
     m AS (SELECT CAST(count(*) AS BIGINT) AS m FROM e0),
     deg AS (
@@ -955,11 +948,7 @@ def graph_modularity_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
     community) table on each endpoint — two equi-joins on node id, the
     standard vertex-cut shape; m is a 1-row broadcast.  Nothing here
     exceeds the cost of one LPA round."""
-    li = table(spark, sf_dir, "lineitem")
-    e0 = li.select(
-        F.col("l_partkey").alias("u"),
-        (F.col("l_suppkey") + _SUPP_OFF).alias("v"),
-    ).distinct().localCheckpoint()
+    e0 = _part_supplier_edges(spark, sf_dir).localCheckpoint()
     labels = shared_lpa_labels(spark, sf_dir)
     m = e0.agg(F.count(F.lit(1)).alias("m"))
     deg = (
@@ -1011,10 +1000,7 @@ def graph_modularity_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _probe_modularity(spark: SparkSession, sf_dir: str) -> int:
     """Dominant intermediate: the distinct part-supplier edge list —
     the frame each LPA round joins and the e_inside join scans twice."""
-    li = table(spark, sf_dir, "lineitem")
-    return (
-        li.select("l_partkey", "l_suppkey").distinct().count()
-    )
+    return _part_supplier_edges(spark, sf_dir).count()
 
 
 # ---------------------------------------------------------------------------
@@ -1064,9 +1050,9 @@ def _adjacency(edges: DataFrame) -> DataFrame:
     one union+collect_list subtree per consumer (r8: the before-plan
     had two full Exchange+BroadcastExchange subtrees per round; guide
     §2.4 "two operations keyed the same way can share one exchange")."""
-    und = edges.select(
-        F.col("a").alias("u"), F.col("b").alias("v")
-    ).unionByName(edges.select(F.col("b").alias("u"), F.col("a").alias("v")))
+    und = _undirected(
+        edges.select(F.col("a").alias("u"), F.col("b").alias("v"))
+    )
     return (
         und.groupBy("u")
         .agg(F.collect_list("v").alias("nbrs"))
@@ -1291,10 +1277,7 @@ def _ppr_oracle() -> str:
         prev = f"r{k}"
     joined = ",\n    ".join(rounds)
     return f"""
-    WITH e0 AS (
-      SELECT DISTINCT l_partkey AS u, l_suppkey + {_SUPP_OFF} AS v
-      FROM lineitem
-    ),
+    {_PS_EDGES_SQL},
     edges AS (SELECT u, v FROM e0 UNION ALL SELECT v AS u, u AS v FROM e0),
     nodes AS (SELECT DISTINCT u AS node FROM edges),
     deg AS (SELECT u, count(*) AS d FROM edges GROUP BY u),
@@ -1329,14 +1312,7 @@ def graph_ppr_seeded_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan per round: the same one-shuffle broadcast-rank join as
     pagerank_int; the rank frame here is smaller (reach-bounded)."""
-    li = table(spark, sf_dir, "lineitem")
-    e0 = li.select(
-        F.col("l_partkey").alias("u"),
-        (F.col("l_suppkey") + F.lit(_SUPP_OFF)).alias("v"),
-    ).distinct()
-    edges = e0.unionByName(
-        e0.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
+    edges = _undirected(_part_supplier_edges(spark, sf_dir))
     deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     # r9 note: a v-co-partitioned ed + node-co-partitioned nodes (the
     # LPA/pagerank treatment) was MEASURED SLOWER here (3.0 -> 5.1 s):
@@ -1403,14 +1379,9 @@ def _probe_ppr(spark: SparkSession, sf_dir: str) -> int:
     _PPR_ITERS x |E|.  Replayed here with the same frontier recursion
     (reach_r+1 = N(reach_r) ∪ seeds; rank support equals reach because
     seeds re-inject teleport mass every round)."""
-    li = table(spark, sf_dir, "lineitem")
-    e0 = li.select(
-        F.col("l_partkey").alias("u"),
-        (F.col("l_suppkey") + F.lit(_SUPP_OFF)).alias("v"),
-    ).distinct()
-    edges = e0.unionByName(
-        e0.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=True)
+    edges = _undirected(_part_supplier_edges(spark, sf_dir)).localCheckpoint(
+        eager=True
+    )
     seeds = edges.select(F.col("u").alias("node")).distinct().filter(
         F.col("node").isin(*_PPR_SEEDS)
     )
@@ -1638,10 +1609,8 @@ def graph_neighborhood_function(
         .cast("long")
         .alias("n_nodes_excluded"),
     )
-    sym = pairs.select(
-        F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
-    ).unionByName(
-        pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
+    sym = _undirected(
+        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
     )
     # Components are edge-closed, so a semi-join on u keeps exactly the
     # in-scope edges.  Checkpoint ONCE: every round's join reads it,
@@ -1704,10 +1673,8 @@ def _probe_neighborhood(spark: SparkSession, sf_dir: str) -> int:
     kept = labels.join(
         F.broadcast(sizes.filter(F.col("sz") <= _ANF_COMPONENT_CAP)), "comp"
     ).select("node")
-    sym = pairs.select(
-        F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
-    ).unionByName(
-        pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
+    sym = _undirected(
+        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
     )
     sym = (
         sym.join(kept, sym["u"] == kept["node"], "leftsemi")
@@ -1799,9 +1766,8 @@ def hb_register_rounds(
 
     pairs = shared_ngram_pairs(spark, sf_dir).select("doc_a", "doc_b")
     sym = (
-        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-        .unionByName(
-            pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
+        _undirected(
+            pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
         )
         .distinct()
         .localCheckpoint(eager=True)
@@ -2066,10 +2032,8 @@ def graph_jaccard_neighbors_top20(
         .select("doc_a", "doc_b")
         .localCheckpoint()
     )
-    sym = pairs.select(
-        F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
-    ).unionByName(
-        pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
+    sym = _undirected(
+        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
     )
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     kept = sym.join(
@@ -2256,9 +2220,8 @@ def _probe_harmonic(spark: SparkSession, sf_dir: str) -> int:
 
     pairs = shared_ngram_pairs(spark, sf_dir).select("doc_a", "doc_b")
     sym = (
-        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-        .unionByName(
-            pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
+        _undirected(
+            pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
         )
         .distinct()
         .localCheckpoint(eager=True)
@@ -2355,10 +2318,8 @@ def graph_degree_assortativity(
         .select("doc_a", "doc_b")
         .localCheckpoint()
     )
-    sym = pairs.select(
-        F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
-    ).unionByName(
-        pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
+    sym = _undirected(
+        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
     )
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     du = deg.select(F.col("u"), F.col("d").alias("x"))
@@ -2470,10 +2431,8 @@ def graph_clustering_coefficient(
         .select("doc_a", "doc_b")
         .localCheckpoint()
     )
-    sym = pairs.select(
-        F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
-    ).unionByName(
-        pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
+    sym = _undirected(
+        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
     )
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     pv = triangle_counts_from_edges(pairs).select(
@@ -2595,9 +2554,8 @@ def graph_random_walk_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pairs = shared_ngram_pairs(spark, sf_dir).select("doc_a", "doc_b")
     sym = (
-        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-        .unionByName(
-            pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
+        _undirected(
+            pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
         )
         .localCheckpoint(eager=True)
     )
@@ -2898,10 +2856,7 @@ def _bfs_oracle() -> str:
         for k in range(_BFS_R + 1)
     )
     return f"""
-    WITH e0 AS (
-      SELECT DISTINCT l_partkey AS u, l_suppkey + {_SUPP_OFF} AS v
-      FROM lineitem
-    ),
+    {_PS_EDGES_SQL},
     edges AS (SELECT u, v FROM e0 UNION ALL SELECT v AS u, u AS v FROM e0),
     deg AS (SELECT u, count(*) AS d FROM edges GROUP BY u),
     seed AS (SELECT u AS node FROM deg ORDER BY d DESC, u LIMIT 1),
@@ -2934,14 +2889,9 @@ def graph_bfs_distance_histogram(
     a bounded radius keeps the plan depth fixed — the same bounded-
     rounds discipline as the HyperBall family.  The seed choice is a
     deterministic argmax, stated identically in both engines."""
-    li = table(spark, sf_dir, "lineitem")
-    e0 = li.select(
-        F.col("l_partkey").alias("u"),
-        (F.col("l_suppkey") + F.lit(_SUPP_OFF)).alias("v"),
-    ).distinct()
-    edges = e0.unionByName(
-        e0.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=True)
+    edges = _undirected(_part_supplier_edges(spark, sf_dir)).localCheckpoint(
+        eager=True
+    )
     deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     seed = (
         deg.orderBy(F.desc("d"), "u").limit(1).select(F.col("u").alias("node"))
@@ -3003,10 +2953,7 @@ def _closeness_oracle() -> str:
         for k in range(_CLO_R + 1)
     )
     return f"""
-    WITH e0 AS (
-      SELECT DISTINCT l_partkey AS u, l_suppkey + {_SUPP_OFF} AS v
-      FROM lineitem
-    ),
+    {_PS_EDGES_SQL},
     edges AS (SELECT u, v FROM e0 UNION ALL SELECT v AS u, u AS v FROM e0),
     deg AS (SELECT u, count(*) AS d FROM edges GROUP BY u),
     seeds AS (SELECT u AS seed FROM deg ORDER BY d DESC, u
@@ -3044,14 +2991,9 @@ def graph_closeness_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     documented semantic (nodes beyond R contribute nothing), which is
     also the production choice — distant mass adds negligible
     closeness but unbounded rounds."""
-    li = table(spark, sf_dir, "lineitem")
-    e0 = li.select(
-        F.col("l_partkey").alias("u"),
-        (F.col("l_suppkey") + F.lit(_SUPP_OFF)).alias("v"),
-    ).distinct()
-    edges = e0.unionByName(
-        e0.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=True)
+    edges = _undirected(_part_supplier_edges(spark, sf_dir)).localCheckpoint(
+        eager=True
+    )
     deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     seeds = (
         deg.orderBy(F.desc("d"), "u")
@@ -3108,10 +3050,7 @@ def _walk_centrality_oracle() -> str:
         )
     joined = ",\n    ".join(rounds)
     return f"""
-    WITH e0 AS (
-      SELECT DISTINCT l_partkey AS u, l_suppkey + {_SUPP_OFF} AS v
-      FROM lineitem
-    ),
+    {_PS_EDGES_SQL},
     edges AS (SELECT u, v FROM e0 UNION ALL SELECT v AS u, u AS v FROM e0),
     nodes AS (SELECT DISTINCT u AS node FROM edges),
     r0 AS (SELECT node, CAST(1 AS BIGINT) AS pr FROM nodes),
@@ -3145,14 +3084,9 @@ def graph_walk_centrality_top20(
     hub degrees (~10^3) that is ~10^12 of BIGINT's 9.2*10^18 — at
     larger scale, renormalize per round (divide by the round's max)
     before the next multiply, which preserves the ranking."""
-    li = table(spark, sf_dir, "lineitem")
-    e0 = li.select(
-        F.col("l_partkey").alias("u"),
-        (F.col("l_suppkey") + F.lit(_SUPP_OFF)).alias("v"),
-    ).distinct()
-    edges = e0.unionByName(
-        e0.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=True)
+    edges = _undirected(_part_supplier_edges(spark, sf_dir)).localCheckpoint(
+        eager=True
+    )
     ranks = (
         edges.select(F.col("u").alias("node"))
         .distinct()
@@ -3181,10 +3115,7 @@ def graph_walk_centrality_top20(
 @register(
     "graph_degree_gini",
     oracle=f"""
-    WITH e0 AS (
-      SELECT DISTINCT l_partkey AS u, l_suppkey + {_SUPP_OFF} AS v
-      FROM lineitem
-    ),
+    {_PS_EDGES_SQL},
     edges AS (SELECT u, v FROM e0 UNION ALL SELECT v AS u, u AS v FROM e0),
     deg AS (SELECT u AS node, CAST(count(*) AS BIGINT) AS d
             FROM edges GROUP BY u),
@@ -3222,14 +3153,7 @@ def graph_degree_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final division is exact BIGINT.  The rank window is the only
     super-linear step — one sort of the |nodes|-row degree frame, not
     the edge list."""
-    li = table(spark, sf_dir, "lineitem")
-    e0 = li.select(
-        F.col("l_partkey").alias("u"),
-        (F.col("l_suppkey") + F.lit(_SUPP_OFF)).alias("v"),
-    ).distinct()
-    edges = e0.unionByName(
-        e0.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
+    edges = _undirected(_part_supplier_edges(spark, sf_dir))
     deg = edges.groupBy(F.col("u").alias("node")).agg(
         F.count(F.lit(1)).alias("d")
     )

@@ -162,3 +162,80 @@ def test_no_list_built_dataframes():
                 if (rel, code) not in _CREATE_DF_ALLOWED:
                     found.append(f"{rel}:{no}: {code}")
     assert not found, "use fixtures.local_df instead:\n" + "\n".join(found)
+
+
+#: Lines of operators/graph.py and tools/dump_round_plan.py that may
+#: alias an edge's second endpoint to ``u`` outside ``graph._undirected``,
+#: by file and source line, with the reason.
+_EDGE_COPY_ALLOWED = {
+    ("operators/graph.py", 'top.select(F.col("doc_b").alias("u"))'):
+        "node-id list of the top pairs' endpoints, not a symmetrization",
+}
+
+
+def _reverses_edge(node) -> bool:
+    """``F.col("doc_b" | "b" | "v").alias("u")``: the second endpoint
+    of an edge renamed to the first."""
+    import ast
+
+    def args(call):
+        return [a.value for a in call.args if isinstance(a, ast.Constant)]
+
+    return (
+        isinstance(node, ast.Call)
+        and getattr(node.func, "attr", None) == "alias"
+        and args(node) == ["u"]
+        and isinstance(node.func.value, ast.Call)
+        and getattr(node.func.value.func, "attr", None) == "col"
+        and args(node.func.value) in (["doc_b"], ["b"], ["v"])
+    )
+
+
+def test_graph_edges_built_once():
+    """The part<->supplier edge list is built only in
+    ``graph._part_supplier_edges`` (its oracle twin only in
+    ``_PS_EDGES_SQL``) and edges are reversed only in
+    ``graph._undirected``, so the queries and
+    ``tools/dump_round_plan.py`` cannot drift from one definition.
+    Oracle SQL strings are not Spark-side builds and are skipped."""
+    import ast
+    import pathlib
+
+    import fortisiem_clickhouse_monitor_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    files = {
+        "operators/graph.py": root / "operators" / "graph.py",
+        "tools/dump_round_plan.py": root.parent / "tools" / "dump_round_plan.py",
+    }
+    found = []
+    for rel, path in files.items():
+        src = path.read_text()
+        lines = src.splitlines()
+        tree = ast.parse(src)
+        helpers = [
+            range(f.lineno, f.end_lineno + 1)
+            for f in ast.walk(tree)
+            if isinstance(f, ast.FunctionDef)
+            and f.name in ("_part_supplier_edges", "_undirected")
+        ]
+        for node in ast.walk(tree):
+            line = getattr(node, "lineno", None)
+            if line is None or any(line in r for r in helpers):
+                continue
+            if isinstance(node, ast.Constant) and node.value == "l_suppkey":
+                what = "part<->supplier edge build"
+            elif _reverses_edge(node):
+                what = "edge reversal"
+            else:
+                continue
+            code = lines[line - 1].strip()
+            if (rel, code) not in _EDGE_COPY_ALLOWED:
+                found.append(f"{rel}:{line}: {what}: {code}")
+    graph_src = files["operators/graph.py"].read_text()
+    n_cte = graph_src.count("SELECT DISTINCT l_partkey AS u")
+    assert n_cte == 1, f"{n_cte} copies of the e0 CTE; use _PS_EDGES_SQL"
+    assert not found, (
+        "use graph._part_supplier_edges / graph._undirected:\n"
+        + "\n".join(found)
+    )

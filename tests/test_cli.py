@@ -6,6 +6,8 @@ all five jobs on a fast cadence."""
 from __future__ import annotations
 
 import json
+import time
+from collections import Counter
 
 import pytest
 
@@ -44,6 +46,24 @@ def test_daemon_emits_all_modes(spark):
     types = {f.split("=", 1)[0] for f in collected}
     expected = {f"PH_SYSTEM_{t}" for _, t in cli.MODES.values()}
     assert types == expected
+
+
+def test_daemon_slow_sink_keeps_tick_budget(spark):
+    """A tick that outlasts --interval makes the triggers fire back to
+    back; each job must still forward exactly `ticks` ticks and the
+    daemon stop long before its deadline (2 x 1 s + 30 s)."""
+    calls: list[str] = []
+
+    def slow_sink(frames: list[str]) -> None:
+        time.sleep(1.5)
+        calls.append(frames[0].split("=", 1)[0])
+
+    t0 = time.monotonic()
+    n = cli.run_daemon(spark, SF_SMALL, interval_seconds=1, ticks=2, sink=slow_sink)
+    elapsed = time.monotonic() - t0
+    assert n == 42  # 21 frames a tick over the five modes
+    assert Counter(calls) == {f"PH_SYSTEM_{t}": 2 for _, t in cli.MODES.values()}
+    assert elapsed < 20
 
 
 def test_daemon_cli_prints_frames(spark, capsys):

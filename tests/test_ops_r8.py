@@ -11,8 +11,15 @@ from fortisiem_clickhouse_monitor_spark.session import free_local_checkpoint
 SF_SMALL = "/root/testdata/sf0.001"
 
 
-def _n_persistent(spark) -> int:
-    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+def _checkpoint_rdd(df) -> int:
+    """Id of the RDD behind a localCheckpoint's LogicalRDD."""
+    return df._jdf.queryExecution().analyzed().rdd().id()
+
+
+def _persisted(spark, rdd_id: int) -> bool:
+    # Keyed on the id, not the context-wide count: a ContextCleaner
+    # sweep of RDDs other tests leaked can land between two counts.
+    return spark.sparkContext._jsc.sc().getPersistentRDDs().contains(rdd_id)
 
 
 def test_free_local_checkpoint_releases_blocks(spark):
@@ -20,18 +27,16 @@ def test_free_local_checkpoint_releases_blocks(spark):
     blocks; free_local_checkpoint must actually release them — flat,
     and nested in the shapes the session caches use (dict of frames,
     tuple of (frame, [frames]))."""
-    base = _n_persistent(spark)
     flat = spark.range(10).localCheckpoint(eager=True)
-    nested = {
-        ("k", "x"): (
-            spark.range(5).localCheckpoint(eager=True),
-            [spark.range(3).localCheckpoint(eager=True)],
-        )
-    }
-    assert _n_persistent(spark) == base + 3
+    inner = spark.range(5).localCheckpoint(eager=True)
+    deepest = spark.range(3).localCheckpoint(eager=True)
+    nested = {("k", "x"): (inner, [deepest])}
+    ids = [_checkpoint_rdd(df) for df in (flat, inner, deepest)]
+    assert len(set(ids)) == 3
+    assert all(_persisted(spark, i) for i in ids)
     free_local_checkpoint(flat)
     free_local_checkpoint(nested)
-    assert _n_persistent(spark) == base
+    assert not any(_persisted(spark, i) for i in ids)
 
 
 def test_free_local_checkpoint_tolerates_non_checkpoints(spark):
@@ -50,18 +55,16 @@ def test_cache_toggle_off_releases_checkpoints(spark):
     from fortisiem_clickhouse_monitor_spark import session
     from fortisiem_clickhouse_monitor_spark.operators import similarity as sim
 
-    base = _n_persistent(spark)
     session.share_subtrees(True)
     try:
-        sim.shared_kmeans_assignment(spark, SF_SMALL).count()
-        populated = _n_persistent(spark)
-        assert populated > base
+        memo = _checkpoint_rdd(sim.shared_kmeans_assignment(spark, SF_SMALL))
+        assert _persisted(spark, memo)
     finally:
         session.share_subtrees(False)
-    # Exactly the memo's own checkpoint is released; any blocks the
-    # kmeans computation checkpoints internally follow per-call
-    # lifecycle and are not the switch's to free.
-    assert _n_persistent(spark) == populated - 1
+    # The memo's own checkpoint is released; any blocks the kmeans
+    # computation checkpoints internally follow per-call lifecycle and
+    # are not the switch's to free.
+    assert not _persisted(spark, memo)
     assert not session._SUBTREES
 
 

@@ -1,5 +1,6 @@
-"""Pure-Python tests for the measurement tooling the scale story rests
-on (tools/scaling_curves.py, tools/bench_diff.py) — no Spark session."""
+"""Tests for the measurement tooling the scale story rests on:
+pure-Python checks of tools/scaling_curves.py and tools/bench_diff.py,
+and a Spark smoke test of tools/dump_round_plan.py."""
 
 from __future__ import annotations
 
@@ -7,12 +8,16 @@ import json
 import os
 import sys
 
+import pytest
+
 sys.path.insert(
     0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
 )
 
 import bench_diff  # noqa: E402
+import dump_round_plan  # noqa: E402
 import scaling_curves  # noqa: E402
+from conftest import SF_SMALL  # noqa: E402
 
 
 def test_fit_alpha_recovers_known_exponents():
@@ -131,3 +136,15 @@ def test_bench_compact_line_fits_driver_tail():
     top15 = sorted(timings, key=timings.get, reverse=True)[:15]
     assert set(parsed["queries"]) <= set(top15)
     assert parsed["artifact"] == "docs/bench_latest_full.json"
+
+
+@pytest.mark.parametrize("name", sorted(dump_round_plan.BUILDERS))
+def test_dump_round_plan_builds_and_explains(spark, name):
+    """Each round the tool rebuilds plans at sf0.001 as a join over the
+    query's checkpointed edges, not a bare checkpoint scan."""
+    df = dump_round_plan.BUILDERS[name](spark, SF_SMALL)
+    text = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    assert "== Physical Plan ==" in text
+    assert "BroadcastHashJoin" in text

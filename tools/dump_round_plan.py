@@ -10,7 +10,8 @@ the query builds it, WITHOUT the trailing checkpoint, and explains it:
 the evidence file for claims like "the vote join runs with zero
 per-round Exchange" (r9: LPA / pagerank co-partitioned edges).
 
-Supported: graph_label_propagation, graph_pagerank_top20.
+Supported: graph_label_propagation, graph_pagerank_top20,
+graph_ktruss_edges (the keys of ``BUILDERS``).
 """
 
 from __future__ import annotations
@@ -26,18 +27,15 @@ from fortisiem_clickhouse_monitor_spark.session import get_spark  # noqa: E402
 
 
 def _lpa_round(spark, sf_dir):
-    from fortisiem_clickhouse_monitor_spark.operators.graph import _SUPP_OFF
-    from fortisiem_clickhouse_monitor_spark.sources.tables import table
+    from fortisiem_clickhouse_monitor_spark.operators.graph import (
+        _part_supplier_edges,
+        _undirected,
+    )
 
-    li = table(spark, sf_dir, "lineitem")
-    e0 = li.select(
-        F.col("l_partkey").alias("u"),
-        (F.col("l_suppkey") + _SUPP_OFF).alias("v"),
-    ).distinct()
     # Mirror graph_label_propagation: the edge checkpoint is clustered
     # by the vote key, so the round needs no per-round repartition.
     edges = (
-        e0.unionByName(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        _undirected(_part_supplier_edges(spark, sf_dir))
         .repartition("v")
         .localCheckpoint()
     )
@@ -56,18 +54,11 @@ def _lpa_round(spark, sf_dir):
 def _pagerank_round(spark, sf_dir):
     from fortisiem_clickhouse_monitor_spark.operators.graph import (
         _PR_SCALE,
-        _SUPP_OFF,
+        _part_supplier_edges,
+        _undirected,
     )
-    from fortisiem_clickhouse_monitor_spark.sources.tables import table
 
-    li = table(spark, sf_dir, "lineitem")
-    e0 = li.select(
-        F.col("l_partkey").alias("u"),
-        (F.col("l_suppkey") + F.lit(_SUPP_OFF)).alias("v"),
-    ).distinct()
-    edges = e0.unionByName(
-        e0.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
+    edges = _undirected(_part_supplier_edges(spark, sf_dir))
     deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     ed = edges.join(F.broadcast(deg), "u")
     # Mirror pagerank_int: the checkpoint is clustered by the
