@@ -707,7 +707,7 @@ def sketch_heavy_hitter_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cands = toks.mapInPandas(mg_partition, "token string").distinct()
     return (
-        toks.join(F.broadcast(cands), "token")
+        toks.join(cands, "token")
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.desc("n"), "token")
@@ -786,7 +786,7 @@ def quality_median_filter_per_lang(spark: SparkSession, sf_dir: str) -> DataFram
         F.expr("percentile(stop_ratio, 0.5)").alias("med")
     )
     return (
-        scored.join(F.broadcast(meds), "lang")
+        scored.join(meds, "lang")
         .filter(F.col("stop_ratio") > F.col("med"))
         .select("doc_id", "lang", F.round("stop_ratio", 6).alias("stop_ratio"))
     )
@@ -1024,7 +1024,7 @@ def sketch_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.array(F.lit(0.5), F.lit(0.9), F.lit(0.99))).alias("p")
     )
     qb = (
-        cum.crossJoin(F.broadcast(ps))
+        cum.crossJoin(ps)
         .filter(F.col("cum_c") >= F.ceil(F.col("p") * F.col("total")).cast("long"))
         .groupBy("p")
         .agg(F.min("bucket").alias("qb"))
@@ -1098,10 +1098,8 @@ def timeseries_gap_fill_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.expr("sequence(lo, hi, interval 1 day)")).alias("day")
     )
     types = ev.select("event_type").distinct()
-    grid = types.crossJoin(F.broadcast(days))
-    return grid.join(
-        F.broadcast(counts), ["event_type", "day"], "left"
-    ).select(
+    grid = types.crossJoin(days)
+    return grid.join(counts, ["event_type", "day"], "left").select(
         "event_type",
         "day",
         F.coalesce(F.col("n"), F.lit(0).cast("long")).alias("n"),
@@ -1172,7 +1170,7 @@ def sketch_rolling_7d_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_add("day", F.col("off")).alias("day"), "bucket", "m_rho"
     )
     merged = (
-        scattered.join(F.broadcast(days), "day")
+        scattered.join(days, "day")
         .groupBy("day", "bucket")
         .agg(F.max("m_rho").alias("m_rho"))
     )
@@ -1254,7 +1252,7 @@ def timeseries_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     cur = daily.select(F.col("day_num").alias("d"), F.col("cnt").alias("y"))
     prev = daily.select(F.col("day_num").alias("p"), F.col("cnt").alias("x"))
     pairs = (
-        cur.crossJoin(F.broadcast(lags))
+        cur.crossJoin(lags)
         .join(prev, F.col("p") == F.col("d") - F.col("lag"))
     )
     mom = pairs.groupBy("lag").agg(
@@ -1493,7 +1491,7 @@ def sketch_bloom_fpr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_sub(F.max("l_shipdate"), 180).alias("c")
     )
     ins = (
-        li.join(F.broadcast(cutoff))
+        li.join(cutoff)
         .filter(F.col("l_shipdate") >= F.col("c"))
         .select(F.col("l_partkey").alias("key"))
         .distinct()
@@ -1562,8 +1560,8 @@ def sketch_bloom_fpr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     r = F.col("n_bits_set").cast("double") / F.lit(_BLOOM_M)
     return (
-        ni.crossJoin(F.broadcast(nb))
-        .crossJoin(F.broadcast(ag))
+        ni.crossJoin(nb)
+        .crossJoin(ag)
         .select(
             "n_inserted",
             "n_bits_set",
@@ -1736,8 +1734,8 @@ def sketch_hll_intersection_eval(
         hll.estimate_col(F.col("s_present"), F.col("n_present")).alias("eu"),
     )
     return (
-        eu.join(F.broadcast(ea), "type_a")
-        .join(F.broadcast(eb), "type_b")
+        eu.join(ea, "type_a")
+        .join(eb, "type_b")
         .join(F.broadcast(exact), ["type_a", "type_b"], "left")
         .select(
             "type_a",
@@ -1970,13 +1968,13 @@ def stats_jackknife_mean_se(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("s_g").alias("s"),
         F.count(F.lit(1)).alias("gcnt"),
     )
-    loo = per.crossJoin(F.broadcast(tot)).select(
+    loo = per.crossJoin(tot).select(
         F.expr("(1000 * (s - s_g)) DIV (n - n_g)").alias("loo_mc")
     )
     sum_loo = loo.agg(F.sum("loo_mc").cast("long").alias("sum_loo"))
     dev = (
-        loo.crossJoin(F.broadcast(sum_loo))
-        .crossJoin(F.broadcast(tot))
+        loo.crossJoin(sum_loo)
+        .crossJoin(tot)
         .agg(
             F.sum(
                 (F.col("gcnt") * F.col("loo_mc") - F.col("sum_loo"))
@@ -1986,7 +1984,7 @@ def stats_jackknife_mean_se(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("ssd")
         )
     )
-    return tot.crossJoin(F.broadcast(dev)).select(
+    return tot.crossJoin(dev).select(
         F.col("n").alias("n_events"),
         F.col("gcnt").alias("n_buckets"),
         F.round(F.col("s").cast("double") / (100.0 * F.col("n")), 6).alias(
@@ -2073,7 +2071,7 @@ def rank_pareto_frontier_parts(
         F.coalesce(F.min("bmin").over(w_carry), big).alias("carry_min"),
     )
     frontier = (
-        local.join(F.broadcast(carry), "bucket")
+        local.join(carry, "bucket")
         .filter(
             F.least(F.col("prev_min"), F.col("carry_min"))
             > F.col("p_size")
@@ -2081,7 +2079,7 @@ def rank_pareto_frontier_parts(
         .select("p_retailprice", "p_size")
     )
     return p.join(
-        F.broadcast(frontier), ["p_retailprice", "p_size"]
+        frontier, ["p_retailprice", "p_size"]
     ).select("p_partkey", "p_retailprice", "p_size")
 
 
@@ -2157,7 +2155,7 @@ def sketch_kmv_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     est = F.when(
         F.col("n_kept") < _KMV_K, F.col("n_kept").cast("double")
     ).otherwise(F.lit(_KMV_K - 1) * F.lit(_KMV_M) / F.col("kth"))
-    return s.crossJoin(F.broadcast(e)).select(
+    return s.crossJoin(e).select(
         "n_exact",
         "n_kept",
         F.round(est, 2).alias("kmv_estimate"),
@@ -2318,7 +2316,7 @@ def sketch_ams_f2_moment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .over(Window.orderBy(F.col("s") * F.col("s"), F.col("j")))
         .alias("rn"),
     ).filter(F.col("rn") == (_AMS_D + 1) // 2)
-    return med.crossJoin(F.broadcast(f2)).select(
+    return med.crossJoin(f2).select(
         "exact_f2",
         "ams_f2",
         F.round(
@@ -2544,15 +2542,15 @@ def sketch_kmv_intersection_eval(
     )
     inter = (
         ka.join(kb, "hv")
-        .crossJoin(F.broadcast(th))
+        .crossJoin(th)
         .filter(F.col("hv") <= F.col("theta"))
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
     exact = ha.join(hb, "hv").agg(F.count(F.lit(1)).alias("n_exact"))
     est = F.col("n_inter") * F.lit(_KMV_M) / F.col("theta")
     return (
-        inter.crossJoin(F.broadcast(exact))
-        .crossJoin(F.broadcast(th))
+        inter.crossJoin(exact)
+        .crossJoin(th)
         .select(
             "n_exact",
             "n_inter",
@@ -2737,14 +2735,14 @@ def timeseries_periodogram_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchors = daily.agg(
         F.min("day").alias("day0"), F.avg("c").alias("mu")
     )
-    centered = daily.crossJoin(F.broadcast(anchors)).select(
+    centered = daily.crossJoin(anchors).select(
         F.datediff("day", "day0").cast("long").alias("d"),
         (F.col("c") - F.col("mu")).alias("x"),
     )
     periods = spark.range(2, 15).select(F.col("id").cast("int").alias("period"))
     theta = F.lit(2.0 * math.pi) * F.col("d") / F.col("period")
     return (
-        centered.crossJoin(F.broadcast(periods))
+        centered.crossJoin(periods)
         .groupBy("period")
         .agg(
             F.round(
@@ -2971,9 +2969,9 @@ def timeseries_lttb_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c").alias("nc0"),
     )
     anchored = (
-        interior.join(F.broadcast(p), "b", "left")
-        .join(F.broadcast(n), "b", "left")
-        .crossJoin(F.broadcast(ends))
+        interior.join(p, "b", "left")
+        .join(n, "b", "left")
+        .crossJoin(ends)
         .select(
             "day",
             "y",
@@ -3109,7 +3107,7 @@ def timeseries_stl_residual_outliers(
         F.round(F.expr("percentile(residual, 0.5)"), 6).alias("med")
     )
     mad = (
-        resid.crossJoin(F.broadcast(med))
+        resid.crossJoin(med)
         .agg(
             F.round(
                 F.expr("percentile(abs(residual - med), 0.5)"), 6
@@ -3117,7 +3115,7 @@ def timeseries_stl_residual_outliers(
             F.first("med").alias("med"),
         )
     )
-    return resid.crossJoin(F.broadcast(mad)).select(
+    return resid.crossJoin(mad).select(
         "day",
         "c",
         "residual",
@@ -3312,7 +3310,7 @@ def stats_bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"), F.sum("cents").alias("s")
     )
     return (
-        tot.crossJoin(F.broadcast(bounds))
+        tot.crossJoin(bounds)
         .select(
             F.col("n").alias("n_events"),
             F.lit(_BOOT_B).cast("long").alias("n_replicates"),
@@ -3473,7 +3471,7 @@ def sketch_kmv_difference_eval(
         .select("user_id", F.to_date("ts").alias("d"))
     )
     anchor = clicks.agg(F.min("d").alias("d0"))
-    sliced = clicks.crossJoin(F.broadcast(anchor))
+    sliced = clicks.crossJoin(anchor)
 
     def kmv(pred):
         h = (
@@ -3504,11 +3502,11 @@ def sketch_kmv_difference_eval(
     th = ta.crossJoin(tb.withColumnRenamed("theta", "theta_b")).select(
         F.least("theta", "theta_b").alias("theta")
     )
-    ka_cut = ka.crossJoin(F.broadcast(th)).filter(
+    ka_cut = ka.crossJoin(th).filter(
         F.col("hv") <= F.col("theta")
     )
     kb_cut = (
-        kb.crossJoin(F.broadcast(th))
+        kb.crossJoin(th)
         .filter(F.col("hv") <= F.col("theta"))
         .select("hv")
     )
@@ -3520,8 +3518,8 @@ def sketch_kmv_difference_eval(
     )
     est = F.col("n_diff") * F.lit(_KMV_M) / F.col("theta")
     return (
-        diff.crossJoin(F.broadcast(exact))
-        .crossJoin(F.broadcast(th))
+        diff.crossJoin(exact)
+        .crossJoin(th)
         .select(
             "n_exact",
             "n_diff",
@@ -3608,7 +3606,7 @@ def timeseries_spectral_entropy(
         F.count(F.lit(1)).alias("c")
     )
     anchors = daily.agg(F.min("day").alias("day0"), F.avg("c").alias("mu"))
-    centered = daily.crossJoin(F.broadcast(anchors)).select(
+    centered = daily.crossJoin(anchors).select(
         F.datediff("day", "day0").cast("long").alias("d"),
         (F.col("c") - F.col("mu")).alias("x"),
     )
@@ -3617,7 +3615,7 @@ def timeseries_spectral_entropy(
     )
     theta = F.lit(2.0 * math.pi) * F.col("d") / F.col("period")
     spec = (
-        centered.crossJoin(F.broadcast(periods))
+        centered.crossJoin(periods)
         .groupBy("period")
         .agg(
             F.round(
@@ -3642,8 +3640,8 @@ def timeseries_spectral_entropy(
     p_i = F.col("power") / F.col("total_power")
     ent = -F.sum(F.when(F.col("power") > 0, p_i * F.log(p_i)).otherwise(0.0))
     return (
-        spec.crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(peak))
+        spec.crossJoin(tot)
+        .crossJoin(peak)
         .groupBy("n_periods", "peak_period", "peak_power", "total_power")
         .agg(
             F.round(ent, 6).alias("spectral_entropy"),
@@ -3885,7 +3883,7 @@ def stats_conversion_rate_ztest(
     blows up — found by the sf0.1 gate)."""
     ev = table(spark, sf_dir, "events")
     span = ev.agg(F.min(F.to_date("ts")).alias("d0"))
-    base = ev.crossJoin(F.broadcast(span)).select(
+    base = ev.crossJoin(span).select(
         F.when(F.to_date("ts") < F.date_add("d0", 7), "week1")
         .when(F.to_date("ts") >= F.date_add("d0", 21), "week4")
         .alias("p"),
@@ -4022,7 +4020,7 @@ def stats_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("nb"),
     )
-    d = cum.crossJoin(F.broadcast(tot)).select(
+    d = cum.crossJoin(tot).select(
         "cents",
         "na",
         "nb",
@@ -4241,8 +4239,8 @@ def stats_spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     r = (
-        u.join(F.broadcast(rx), "x")
-        .join(F.broadcast(ry.withColumnRenamed("r2", "r2y")), "y")
+        u.join(rx, "x")
+        .join(ry.withColumnRenamed("r2", "r2y"), "y")
         .select(
             F.col("r2").cast("long").alias("a"),
             F.col("r2y").cast("long").alias("b"),
@@ -4331,7 +4329,7 @@ def stats_kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("disc").cast("long").alias("dd"),
             F.sum("tie_y").cast("long").alias("ty"),
         )
-        .crossJoin(F.broadcast(n))
+        .crossJoin(n)
     )
     n0 = F.col("n") * (F.col("n") - 1) / 2
     return s.select(
@@ -4432,7 +4430,7 @@ def sketch_kmv_union_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     est = F.col("n_kept") * F.lit(_KMV_M) / F.col("theta")
-    return tu.crossJoin(F.broadcast(exact)).select(
+    return tu.crossJoin(exact).select(
         "n_exact",
         "n_kept",
         F.round(est, 2).alias("kmv_estimate"),

@@ -266,7 +266,7 @@ def outlier_events_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     z = (F.col("value") - F.col("mu")) / F.col("sigma")
     return (
-        e.join(F.broadcast(stats), "event_type")
+        e.join(stats, "event_type")
         .filter(F.abs(z) > 3.0)
         .select("event_id", "event_type", "value", F.round(z, 3).alias("z"))
     )
@@ -616,7 +616,7 @@ def normalize_winsorize_values(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("percentile(value, 0.99)").alias("p99"),
     )
     clipped = F.greatest("p01", F.least("p99", F.col("value")))
-    return ev.join(F.broadcast(cuts), "event_type").select(
+    return ev.join(cuts, "event_type").select(
         "event_id",
         "event_type",
         F.round("value", 4).alias("raw_value"),
@@ -688,7 +688,7 @@ def timeseries_dow_seasonal_outliers(spark: SparkSession, sf_dir: str) -> DataFr
     ratio_mc = F.expr("(1000 * n * dow_days) DIV dow_total")
     return (
         daily.withColumn("dow", dow)
-        .join(F.broadcast(base), ["event_type", "dow"])
+        .join(base, ["event_type", "dow"])
         .select(
             "event_type",
             "day",
@@ -1249,12 +1249,12 @@ def outlier_daily_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", F.col("ts").cast("date").alias("day")
     ).agg(F.count(F.lit(1)).alias("n"))
     med = daily.groupBy("event_type").agg(F.median("n").alias("med"))
-    dev = daily.join(F.broadcast(med), "event_type").withColumn(
+    dev = daily.join(med, "event_type").withColumn(
         "adev", F.abs(F.col("n") - F.col("med"))
     )
     mad = dev.groupBy("event_type").agg(F.median("adev").alias("mad"))
     return (
-        dev.join(F.broadcast(mad), "event_type")
+        dev.join(mad, "event_type")
         .filter(
             (F.col("mad") > 0)
             & (F.abs(F.col("n") - F.col("med")) > 2.5 * 1.4826 * F.col("mad"))
@@ -1391,7 +1391,7 @@ def cdc_snapshot_diff_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     def snap(shift: int) -> DataFrame:
         bound = m0.select(F.add_months("m", shift).alias("bound"))
         return (
-            o.join(F.broadcast(bound), o["month"] == bound["bound"])
+            o.join(bound, o["month"] == bound["bound"])
             .groupBy("custkey")
             .agg(
                 F.count(F.lit(1)).alias("n_orders"),
@@ -1592,7 +1592,7 @@ def behavior_dau_mau_stickiness(
                 )
             ).alias("day_num"),
         )
-        .join(F.broadcast(days), "day_num", "semi")
+        .join(days, "day_num", "semi")
         .distinct()
     )
     dau = act.groupBy("day_num").agg(F.count(F.lit(1)).alias("dau"))
@@ -1653,7 +1653,7 @@ def cdc_scd2_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("cutoff")
     )
-    tagged = ev.crossJoin(F.broadcast(cut))
+    tagged = ev.crossJoin(cut)
     pre = tagged.filter(F.unix_timestamp("ts") < F.col("cutoff"))
     post = tagged.filter(F.unix_timestamp("ts") >= F.col("cutoff"))
 
@@ -1672,7 +1672,7 @@ def cdc_scd2_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     prior = scd2(pre)
     batch_versions = scd2(post)
     first_batch = post.groupBy("user_id").agg(F.min("ts").alias("fts"))
-    merged_prior = prior.join(F.broadcast(first_batch), "user_id", "left").select(
+    merged_prior = prior.join(first_batch, "user_id", "left").select(
         "user_id",
         "valid_from",
         F.when(
@@ -1705,7 +1705,7 @@ def _probe_scd2_merge(spark: SparkSession, sf_dir: str) -> int:
         ).alias("cutoff")
     )
     return (
-        ev.crossJoin(F.broadcast(cut))
+        ev.crossJoin(cut)
         .filter(F.unix_timestamp("ts") >= F.col("cutoff"))
         .count()
     )
@@ -2179,7 +2179,7 @@ def behavior_cohort_value_curve(
     cum = weekly.withColumn(
         "cum_value_cents", F.sum("week_value_cents").over(cw).cast("long")
     )
-    return cum.join(F.broadcast(sizes), "cohort_week").select(
+    return cum.join(sizes, "cohort_week").select(
         "cohort_week",
         "week_offset",
         "cohort_users",
@@ -2268,7 +2268,7 @@ def behavior_activity_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("x").alias("total"),
         F.sum(F.col("i") * F.col("x")).alias("s_ix"),
     )
-    shares = ranked.crossJoin(F.broadcast(agg)).agg(
+    shares = ranked.crossJoin(agg).agg(
         F.sum(
             F.when(
                 F.col("i") > F.col("n") - F.ceil(F.col("n") * 0.01),
@@ -2286,7 +2286,7 @@ def behavior_activity_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("top10_events"),
     )
-    return agg.crossJoin(F.broadcast(shares)).select(
+    return agg.crossJoin(shares).select(
         F.col("n").alias("n_users"),
         F.col("total").alias("total_events"),
         F.round(
@@ -2398,7 +2398,7 @@ def behavior_markov_next_event_eval(
         F.lead("event_type").over(w).alias("next_type"),
         F.lead(F.unix_micros("ts")).over(w).alias("next_us"),
     ).filter(F.col("next_type").isNotNull())
-    pairs = ordered.crossJoin(F.broadcast(bounds)).select(
+    pairs = ordered.crossJoin(bounds).select(
         "event_type",
         "next_type",
         (F.col("next_us") >= F.col("cut")).alias("is_test"),
@@ -2811,10 +2811,8 @@ def rec_item_item_cosine_topk(
         / F.sqrt((F.col("n_a") * F.col("n_b")).cast("double"))
     )
     return (
-        # item counts are part-cardinality; broadcast (checkpoint scans
-        # carry no size stats, so the planner would SMJ).
-        co.join(F.broadcast(na), "part_a")
-        .join(F.broadcast(nb), "part_b")
+        co.join(na, "part_a")
+        .join(nb, "part_b")
         .select(
             "part_a",
             "part_b",
@@ -2911,7 +2909,7 @@ def behavior_kaplan_meier_retention(
         F.min(day).alias("first_day"), F.max(day).alias("last_day")
     )
     obs = ev.agg(F.max(day).alias("end_day"))
-    lif = users.crossJoin(F.broadcast(obs)).select(
+    lif = users.crossJoin(obs).select(
         (F.col("last_day") - F.col("first_day")).alias("t_days"),
         (
             F.col("last_day") < F.col("end_day") - _KM_HORIZON_DAYS
@@ -3642,7 +3640,7 @@ def trend_decayed_event_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         / _DECAY_HALF_LIFE_DAYS,
     )
     return (
-        e.crossJoin(F.broadcast(anchor))
+        e.crossJoin(anchor)
         .groupBy("event_type")
         .agg(
             F.round(F.sum(w), 6).alias("decayed_count"),
@@ -4040,9 +4038,9 @@ def behavior_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     ic = item.select(F.col("event_type").alias("consequent"),
                      F.col("s").alias("s_c"))
     return (
-        pair.join(F.broadcast(ia), "antecedent")
-        .join(F.broadcast(ic), "consequent")
-        .crossJoin(F.broadcast(nb))
+        pair.join(ia, "antecedent")
+        .join(ic, "consequent")
+        .crossJoin(nb)
         .select(
             "antecedent",
             "consequent",
@@ -4369,13 +4367,15 @@ def behavior_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         inter.join(
-            F.broadcast(sizes.select(F.col("event_type").alias("type_a"),
-                                     F.col("n").alias("n_a"))),
+            sizes.select(
+                F.col("event_type").alias("type_a"), F.col("n").alias("n_a")
+            ),
             "type_a",
         )
         .join(
-            F.broadcast(sizes.select(F.col("event_type").alias("type_b"),
-                                     F.col("n").alias("n_b"))),
+            sizes.select(
+                F.col("event_type").alias("type_b"), F.col("n").alias("n_b")
+            ),
             "type_b",
         )
         .select(

@@ -135,7 +135,7 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("dl", F.sum("f").over(Window.partitionBy("doc_id")))
     )
     df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    stats = tf.join(F.broadcast(df), "term").join(F.broadcast(n_docs))
+    stats = tf.join(df, "term").join(n_docs)
     score = (F.col("f").cast("double") / F.col("dl")) * F.log(
         F.col("n_docs").cast("double") / F.col("df")
     )
@@ -210,7 +210,7 @@ def text_bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     idf = (
         tf.groupBy("term")
         .agg(F.count(F.lit(1)).alias("df"))
-        .join(F.broadcast(corpus))
+        .join(corpus)
         .select(
             "term",
             F.log(
@@ -224,7 +224,7 @@ def text_bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         tf.join(F.broadcast(idf), "term")
         .join(dls, "doc_id")
-        .join(F.broadcast(corpus))
+        .join(corpus)
         .groupBy("doc_id")
         .agg(F.round(F.sum(contrib), 4).alias("bm25"))
         .orderBy(F.desc("bm25"), "doc_id")
@@ -374,7 +374,7 @@ def corpus_decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         sh.filter(F.col("source") != "src0")
-        .join(F.broadcast(eval_sh), F.col("s") == F.col("es"))
+        .join(eval_sh, F.col("s") == F.col("es"))
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_contaminated_shingles"))
     )
@@ -531,7 +531,7 @@ def corpus_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     lp = F.log((F.col("ct") + 1.0) / (F.col("tt") + _DSIR_NB)) - F.log(
         (F.col("cr") + 1.0) / (F.col("rt") + _DSIR_NB)
     )
-    lm = lm.crossJoin(F.broadcast(tot)).select("bucket", lp.alias("lp"))
+    lm = lm.crossJoin(tot).select("bucket", lp.alias("lp"))
     scored = (
         feats.join(F.broadcast(lm), "bucket")
         .groupBy("doc_id", "lang")
@@ -684,10 +684,10 @@ def vocab_phrase_pmi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         bi.withColumn("wa", F.split_part("gram", F.lit(" "), F.lit(1)))
         .withColumn("wb", F.split_part("gram", F.lit(" "), F.lit(2)))
-        .join(F.broadcast(ua), "wa")
-        .join(F.broadcast(ub), "wb")
-        .crossJoin(F.broadcast(ut))
-        .crossJoin(F.broadcast(bt))
+        .join(ua, "wa")
+        .join(ub, "wb")
+        .crossJoin(ut)
+        .crossJoin(bt)
     )
     pmi = F.log(
         (F.col("b").cast("double") / F.col("tb"))
@@ -787,7 +787,7 @@ def corpus_source_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.count(F.lit(1)) - F.count_distinct("fp")).alias("n_dup_docs"),
             F.round(F.avg("stop_ratio"), 4).alias("avg_stop_ratio"),
         )
-        .join(F.broadcast(ent), "source")
+        .join(ent, "source")
     )
 
 
@@ -1171,7 +1171,7 @@ def corpus_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     users = pos.select("custkey").distinct()
     draws = (
-        users.crossJoin(F.broadcast(n_parts))
+        users.crossJoin(n_parts)
         .select(
             "custkey",
             F.explode(
@@ -1291,7 +1291,7 @@ def corpus_temporal_holdout_summary(
         ).alias("cutoff")
     )
     per_user = (
-        ev.crossJoin(F.broadcast(cut))
+        ev.crossJoin(cut)
         .groupBy("user_id")
         .agg(
             F.sum(
@@ -1414,7 +1414,7 @@ def corpus_mixture_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0),
         ).cast("long").alias("p_before"),
     )
-    flagged = ranked.crossJoin(F.broadcast(b)).withColumn(
+    flagged = ranked.crossJoin(b).withColumn(
         "sat",
         F.col("avail") * (F.col("n") - F.col("i") + 1) + F.col("p_before")
         <= F.col("budget"),
@@ -1428,7 +1428,7 @@ def corpus_mixture_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0),
         ).alias("p_k"),
     )
-    return flagged.crossJoin(F.broadcast(kk)).select(
+    return flagged.crossJoin(kk).select(
         "source",
         F.col("avail").alias("available_tokens"),
         F.when(F.col("sat"), F.col("avail"))
@@ -1581,7 +1581,7 @@ def corpus_doremi_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, [(s, wts[s]) for s in sorted(wts)], "source string, weight long"
     )
     return (
-        doms.join(F.broadcast(w), "source")
+        doms.join(w, "source")
         .select(
             "source",
             "n_docs",
@@ -1688,8 +1688,8 @@ def pack_padding_waste_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     nw = nw.select(F.col("waste").alias("naive_pad_tokens"))
     sw = sw.select(F.col("waste").alias("sorted_pad_tokens"))
     return (
-        tot.crossJoin(F.broadcast(nw))
-        .crossJoin(F.broadcast(sw))
+        tot.crossJoin(nw)
+        .crossJoin(sw)
         .select(
             "n_docs",
             "total_tokens",
@@ -1768,7 +1768,7 @@ def corpus_epoch_shuffle_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         16,
         10,
     ).cast("long")
-    keyed = d.crossJoin(F.broadcast(ep)).select(
+    keyed = d.crossJoin(ep).select(
         "epoch", "doc_id", h.alias("h")
     )
     shard = F.pmod(F.col("h"), F.lit(_SHUF_SHARDS)).cast("long")
@@ -1837,7 +1837,7 @@ def corpus_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.pow("n_chars", F.lit(_MIX_TAU))).alias("z"),
     )
     w = F.pow("n_chars", F.lit(_MIX_TAU)) / F.col("z")
-    return sz.crossJoin(F.broadcast(tot)).select(
+    return sz.crossJoin(tot).select(
         "lang",
         "n_docs",
         "n_chars",
@@ -1930,9 +1930,9 @@ def quality_label_balance_by_split(
     labels = obs.groupBy("label").agg(F.sum("o").alias("n_label"))
     tot = obs.agg(F.sum("o").alias("n"))
     grid = (
-        margins.crossJoin(F.broadcast(labels))
-        .crossJoin(F.broadcast(tot))
-        .join(F.broadcast(obs), ["split", "label"], "left")
+        margins.crossJoin(labels)
+        .crossJoin(tot)
+        .join(obs, ["split", "label"], "left")
         .select(
             "split",
             "n_split",
@@ -2292,7 +2292,7 @@ def sample_balanced_label_downsample(
         "label", "vec_id", F.row_number().over(w).alias("rn")
     )
     kept = (
-        ranked.crossJoin(F.broadcast(floor_n))
+        ranked.crossJoin(floor_n)
         .filter(F.col("rn") <= F.col("m"))
         .groupBy("label")
         .agg(
@@ -2302,7 +2302,7 @@ def sample_balanced_label_downsample(
     )
     return (
         sized.join(kept, "label")
-        .crossJoin(F.broadcast(floor_n))
+        .crossJoin(floor_n)
         .select(
             "label",
             "n_before",

@@ -484,7 +484,7 @@ def text_oov_rate_top50(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("w", F.lit(True).alias("in_vocab"))
     )
     return (
-        toks.join(F.broadcast(vocab), "w", "left")
+        toks.join(vocab, "w", "left")
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),

@@ -957,28 +957,12 @@ def orient_by_degree(pairs: DataFrame) -> DataFrame:
         .groupBy("v")
         .agg(F.count(F.lit(1)).alias("deg"))
     )
-    # Explicit broadcast: the checkpointed degree table reports no size
-    # stats (LogicalRDD), so without the hint the planner falls back to
-    # TWO sort-merge joins (measured: the enumeration query went
-    # 3.0 -> 5.5 s when the checkpoint landed without these hints).
-    # deg is node-cardinality — always the broadcast side.
-    e = (
-        pairs.join(
-            F.broadcast(
-                deg.select(
-                    F.col("v").alias("doc_a"), F.col("deg").alias("deg_a")
-                )
-            ),
-            "doc_a",
-        )
-        .join(
-            F.broadcast(
-                deg.select(
-                    F.col("v").alias("doc_b"), F.col("deg").alias("deg_b")
-                )
-            ),
-            "doc_b",
-        )
+    e = pairs.join(
+        deg.select(F.col("v").alias("doc_a"), F.col("deg").alias("deg_a")),
+        "doc_a",
+    ).join(
+        deg.select(F.col("v").alias("doc_b"), F.col("deg").alias("deg_b")),
+        "doc_b",
     )
     fwd = (F.col("deg_a") < F.col("deg_b")) | (
         (F.col("deg_a") == F.col("deg_b")) & (F.col("doc_a") < F.col("doc_b"))
@@ -1018,15 +1002,6 @@ def triangles_from_edges(pairs: DataFrame) -> DataFrame:
         orient_by_degree(pairs).repartition(2 * n_parts).localCheckpoint()
     )
     closing = oriented.select(F.col("src").alias("y"), F.col("dst").alias("z"))
-    # The wedge set is the big side (sum of out-deg^2 — 17M rows on the
-    # sf0.1 clique-heavy graph vs 215k edges); the closing edge list is
-    # just the graph.  Checkpoint stats don't reach the join planner,
-    # so hint the broadcast explicitly while the edge list is broadcast-
-    # sized — above that, the shuffled equi-join is the right plan and
-    # AQE takes over.  (Without the hint this was a 17M-row SMJ shuffle:
-    # 13.3 s -> with it back to the r2-era plan shape.)
-    if oriented.count() <= 1_000_000:
-        closing = F.broadcast(closing)
     wedges = wedges_by_degree(oriented).select("src", "y", "z")
     tri = wedges.join(closing, ["y", "z"])
     # Rank order (src lowest by (deg, id)) is not id order — re-sort the
@@ -1127,11 +1102,6 @@ def triangle_counts_from_edges(pairs: DataFrame) -> DataFrame:
     )
     a_u = adj.select(F.col("src").alias("u"), F.col("nbrs").alias("nbrs_u"))
     a_v = adj.select(F.col("src").alias("v"), F.col("nbrs").alias("nbrs_v"))
-    # Adjacency totals O(m) elements — broadcast while the edge list is
-    # broadcast-sized; above that the shuffled equi-join on vertex id is
-    # the right plan (both sides edge-count-sized, AQE-splittable).
-    if oriented.count() <= 5_000_000:
-        a_u, a_v = F.broadcast(a_u), F.broadcast(a_v)
     # Inner joins are correct: an edge whose dst has no out-neighbors
     # closes no triangle and contributes nothing to any count.
     e = (
@@ -1278,9 +1248,8 @@ def dedup_shingle_containment_pairs(
     # The capped posting list feeds THREE consumers (both self-join
     # sides + the size aggregate); materialize it once instead of
     # re-running the explode + cap join per consumer (12.5 s -> ~4 s at
-    # sf0.1). The keep-list is vocabulary-sized — broadcast the cap
-    # join so the posting stream never shuffles for it.
-    filt = sh.join(F.broadcast(keep.select("s")), "s").localCheckpoint()
+    # sf0.1).
+    filt = sh.join(keep.select("s"), "s").localCheckpoint()
     sizes = filt.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a = filt.select(F.col("doc_id").alias("doc_a"), "s")
     b = filt.select(F.col("doc_id").alias("doc_b"), "s")
@@ -1515,9 +1484,9 @@ def dedup_repeated_substring_windows(
     # SHUFFLED HASH, not broadcast (ADVICE r8): per_doc is
     # doc-cardinality — a mandatory broadcast hint would override
     # autoBroadcastJoinThreshold and grow with |documents| at 100 TB.
-    # The hint still avoids the stats-less-scan -> SMJ default (the
-    # reason r8 pinned it); both sides are doc-cardinality rows of a
-    # few longs, so the hash build is bounded per task.
+    # Without this hint the planner broadcasts per_doc at sf0.01 and
+    # sf0.1 (plan diff); both sides are doc-cardinality rows of a few
+    # longs, so the hash build is bounded per task.
     return totals.join(
         per_doc.hint("shuffle_hash"), "doc_id", "left"
     ).select(
@@ -1855,7 +1824,7 @@ def prefix_filter_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = d.select("doc_id", F.explode("toks").alias("w"))
     dfreq = tok.groupBy("w").agg(F.count(F.lit(1)).alias("df"))
     ordered = (
-        tok.join(F.broadcast(dfreq), "w")
+        tok.join(dfreq, "w")
         .groupBy("doc_id")
         .agg(F.array_sort(F.collect_list(F.struct("df", "w"))).alias("arr"))
     )
@@ -2088,7 +2057,7 @@ def dedup_excise_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.sequence(F.col("pos"), F.col("pos") + _SSW_W - 1)).alias("idx"),
     ).distinct()
     affected = dpos.select("doc_id").distinct()
-    positions = base.join(F.broadcast(affected), "doc_id").select(
+    positions = base.join(affected, "doc_id").select(
         "doc_id",
         "n_tokens",
         F.posexplode("toks").alias("idx0", "tok"),
@@ -2104,9 +2073,7 @@ def dedup_excise_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("clean_text"),
     )
-    totals = base.join(F.broadcast(affected), "doc_id").select(
-        "doc_id", "n_tokens"
-    )
+    totals = base.join(affected, "doc_id").select("doc_id", "n_tokens")
     return totals.join(rebuilt, "doc_id", "left").select(
         "doc_id",
         F.col("n_tokens").cast("long").alias("n_tokens"),
@@ -2211,7 +2178,7 @@ def dedup_incremental_new_vs_corpus(spark: SparkSession, sf_dir: str) -> DataFra
     docs = _minhash_docs(spark, sf_dir)
     src = table(spark, sf_dir, "documents").select("doc_id", "source")
     is_new_col = F.col("source").rlike(_INC_NEW_RE)
-    tagged = minhash_bands(docs).join(F.broadcast(src), "doc_id")
+    tagged = minhash_bands(docs).join(src, "doc_id")
     new_b = tagged.filter(is_new_col).select("doc_id", "band_id", "band_key")
     idx_b = tagged.select(
         "doc_id", "band_id", "band_key", is_new_col.alias("is_new")
@@ -2368,8 +2335,8 @@ def dedup_incremental_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     # without this barrier each re-ran the whole Jaccard GEMM subtree
     # (measured 11.4 -> ~6 s at sf0.1).
     flagged = (
-        pairs.join(F.broadcast(fa), "doc_a")
-        .join(F.broadcast(fb), "doc_b")
+        pairs.join(fa, "doc_a")
+        .join(fb, "doc_b")
         .localCheckpoint()
     )
     old_edges = flagged.filter(~F.col("new_a") & ~F.col("new_b")).select(
@@ -2824,7 +2791,7 @@ def quality_near_dup_rate_by_source(
     )
     d = table(spark, sf_dir, "documents").select("doc_id", "source")
     return (
-        d.join(F.broadcast(members), "doc_id", "left")
+        d.join(members, "doc_id", "left")
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -3289,7 +3256,7 @@ def dedup_minhash_band_tuning_eval(
             F.count_if(F.col("is_dup")).alias("n_found"),
         )
     )
-    return percfg.crossJoin(F.broadcast(tot)).select(
+    return percfg.crossJoin(tot).select(
         F.col("nb").alias("n_bands"),
         F.col("r").alias("rows_per_band"),
         F.round(

@@ -49,6 +49,11 @@ _PS_EDGES_SQL = f"""WITH e0 AS (
       FROM lineitem
     )"""
 
+#: DuckDB twin of ``_undirected(_part_supplier_edges(...))``: ``e0``
+#: plus the ``edges`` CTE holding both directions of each edge.
+_PS_UNDIRECTED_SQL = f"""{_PS_EDGES_SQL},
+    edges AS (SELECT u, v FROM e0 UNION ALL SELECT v AS u, u AS v FROM e0)"""
+
 
 def _part_supplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct directed part -> supplier edges (u, v) from lineitem.
@@ -84,8 +89,7 @@ def _pagerank_oracle() -> str:
         prev = f"r{k}"
     joined = ",\n    ".join(rounds)
     return f"""
-    {_PS_EDGES_SQL},
-    edges AS (SELECT u, v FROM e0 UNION ALL SELECT v AS u, u AS v FROM e0),
+    {_PS_UNDIRECTED_SQL},
     deg AS (SELECT u, count(*) AS d FROM edges GROUP BY u),
     r0 AS (SELECT u AS node, CAST({_PR_SCALE} AS BIGINT) AS pr FROM deg),
     {joined}
@@ -103,17 +107,16 @@ def pagerank_int(directed_edges: DataFrame, iters: int = _PR_ITERS) -> DataFrame
     checkpointed-once) degree-annotated edge list against the current
     rank vector, then ONE shuffle (the groupBy on the destination).
     The rank vector has node-cardinality -- orders of magnitude smaller
-    than the edge list -- so broadcasting it is the right default; at
-    100 TB with billions of nodes, drop the hint and pre-partition both
-    sides on the node key so every round reuses one exchange. The
+    than the edge list -- so the planner broadcasts it while it fits
+    autoBroadcastJoinThreshold; at 100 TB with billions of nodes,
+    pre-partition both sides on the node key so every round reuses one
+    exchange. The
     rounds stay LAZY: a 6-deep join/agg tree is well within Catalyst's
     planning budget, and executing one job lets AQE pick strategies per
     round from real sizes instead of paying per-round materializations.
     """
     deg = directed_edges.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-    # deg has node-cardinality -- broadcast it so annotating |E| edge
-    # rows with sender degree is map-side instead of shuffling the whole
-    # edge list on u; checkpoint ONCE so no round re-runs the upstream
+    # Checkpoint ONCE so no round re-runs the upstream
     # edge-building subtree.  CLUSTER on the DESTINATION key (r9 opt
     # round, guide §2.3): with all of a node's in-edges in one
     # partition, every round's groupBy("v") partial aggregate collapses
@@ -125,7 +128,7 @@ def pagerank_int(directed_edges: DataFrame, iters: int = _PR_ITERS) -> DataFrame
     # sizing is right at every scale (a pinned 2x-cores width measured
     # slower at sf0.1 — near-empty task storms).
     ed = (
-        directed_edges.join(F.broadcast(deg), "u")
+        directed_edges.join(deg, "u")
         .repartition("v")
         .localCheckpoint(eager=True)
     )
@@ -133,7 +136,7 @@ def pagerank_int(directed_edges: DataFrame, iters: int = _PR_ITERS) -> DataFrame
         F.col("u").alias("node"), F.lit(_PR_SCALE).cast("long").alias("pr")
     )
     for _ in range(iters):
-        contrib = ed.join(F.broadcast(ranks), ed["u"] == ranks["node"]).select(
+        contrib = ed.join(ranks, ed["u"] == ranks["node"]).select(
             F.col("v"), F.expr("pr DIV d").alias("c")
         )
         ranks = (
@@ -282,7 +285,7 @@ def capped_wedges(pairs: DataFrame, cap: int) -> DataFrame:
     )
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     kept = sym.join(
-        F.broadcast(deg.filter(F.col("d") <= cap).select("u")), "u"
+        deg.filter(F.col("d") <= cap).select("u"), "u"
         # both wedge-join sides read the capped edge frame — compute
         # the degree rollup + semi filter once (r8 opt round, §1.2).
         # r9 note: a pinned u-hash co-partition before this checkpoint
@@ -395,8 +398,7 @@ def _lpa_oracle() -> str:
         prev = f"l{k}"
     joined = ",\n    ".join(rounds)
     return f"""
-    {_PS_EDGES_SQL},
-    edges AS (SELECT u, v FROM e0 UNION ALL SELECT v AS u, u AS v FROM e0),
+    {_PS_UNDIRECTED_SQL},
     l0 AS (SELECT DISTINCT u AS node, u AS lbl FROM edges),
     {joined}
     SELECT node, lbl AS community FROM {prev}
@@ -442,8 +444,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the full |E|-row join output the old per-round
         # repartition("v") shipped.  NOTE the exchange itself cannot be
         # elided: a localCheckpoint scan reports UnknownPartitioning
-        # under AQE (measured, plans/r09/*_round_after.txt) — the same
-        # stats-loss family as the broadcast pins.  Width UNPINNED on
+        # under AQE (measured, plans/r09/*_round_after.txt).  Width UNPINNED on
         # purpose: per-row round work is O(1) (no fan-out), so AQE's
         # byte-proportional sizing is right at every scale (a pinned
         # 2x-cores width measured 2.4 -> 4.2 s here: 3 rounds x 128
@@ -466,11 +467,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (the two-aggregate shape).  Equivalence pinned by
         # tests/test_opt_r9.py::test_lpa_mode_vote_matches_two_stage.
         labels = (
-            # labels are node-cardinality and stats-less after the
-            # round checkpoint — broadcast explicitly so the edge list
-            # is never sort-merge'd (and never re-partitioned) per
-            # round.
-            edges.join(F.broadcast(labels.withColumnRenamed("node", "u")), "u")
+            edges.join(labels.withColumnRenamed("node", "u"), "u")
             .groupBy(F.col("v").alias("node"))
             .agg(F.expr("mode(lbl, true)").alias("lbl"))
             .localCheckpoint()
@@ -605,7 +602,7 @@ def graph_common_neighbors_sketch_eval(
     needed = top.select(F.col("doc_a").alias("u")).unionByName(
         top.select(F.col("doc_b").alias("u"))
     ).distinct()
-    sigs = adj.join(F.broadcast(needed), "u", "semi").select(
+    sigs = adj.join(needed, "u", "semi").select(
         "u", "nb", "deg",
         F.array(*textfns.minhash_signature(F.col("nb"), _CN_MH_K)).alias("sig"),
     )
@@ -805,11 +802,9 @@ def graph_adamic_adar_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     w = F.round(F.lit(_AA_SCALE) / F.log("d")).cast("long")
     keptw = sym.join(
-        F.broadcast(
-            deg.filter(
-                (F.col("d") >= 2) & (F.col("d") <= _CN_DEG_CAP)
-            ).select("u", w.alias("w"))
-        ),
+        deg.filter(
+            (F.col("d") >= 2) & (F.col("d") <= _CN_DEG_CAP)
+        ).select("u", w.alias("w")),
         "u",
         # both wedge-join sides read the weighted kept-edge frame —
         # materialize the degree rollup + filter join once, not once
@@ -980,7 +975,7 @@ def graph_modularity_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         comm.join(inside, "community", "left")
         .withColumn("e_inside", F.coalesce("e_inside", F.lit(0)))
-        .crossJoin(F.broadcast(m))
+        .crossJoin(m)
         .select(
             "community",
             "n_nodes",
@@ -1065,9 +1060,7 @@ def _adj_sides(adj: DataFrame, n_edges: int):
     edge join, with the join strategy pinned: broadcast while the edge
     count permits, else SHUFFLED HASH — never sort-merge, which sorts
     rows carrying the deg-length nbrs arrays and spills them (the
-    measured 20x failure mode: 31 GB spill at 4.3M edges).  The
-    explicit pin matters doubly because ``adj`` is a checkpoint scan
-    with no size statistics.
+    measured 20x failure mode: 31 GB spill at 4.3M edges).
 
     k-truss passes its ROUND-1 ``n_edges`` on every round rather than
     recounting the survivors. The count is stale but safe: peeling only
@@ -1210,9 +1203,7 @@ def graph_ktruss_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("lost"))
         )
         supp = (
-            # losses is bounded by 3x the lost-triangle count (tiny) and
-            # stats-less — pin the broadcast.
-            survivors.join(F.broadcast(losses), ["a", "b"], "left")
+            survivors.join(losses, ["a", "b"], "left")
             .select(
                 "a",
                 "b",
@@ -1277,8 +1268,7 @@ def _ppr_oracle() -> str:
         prev = f"r{k}"
     joined = ",\n    ".join(rounds)
     return f"""
-    {_PS_EDGES_SQL},
-    edges AS (SELECT u, v FROM e0 UNION ALL SELECT v AS u, u AS v FROM e0),
+    {_PS_UNDIRECTED_SQL},
     nodes AS (SELECT DISTINCT u AS node FROM edges),
     deg AS (SELECT u, count(*) AS d FROM edges GROUP BY u),
     r0 AS (
@@ -1320,7 +1310,7 @@ def graph_ppr_seeded_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cost more than the per-round exchanges they remove — PPR's
     # nonzero-rank frontier keeps the round frames reach-bounded and
     # tiny, so the r8 shape stands.
-    ed = edges.join(F.broadcast(deg), "u").localCheckpoint(eager=True)
+    ed = edges.join(deg, "u").localCheckpoint(eager=True)
     # Every round's rank rebuild LEFT-joins `nodes`; lazily chained it
     # re-ran the |E|-row distinct once per round (plus once inside each
     # round's broadcast subtree) — node-cardinality, materialize once
@@ -1389,7 +1379,7 @@ def _probe_ppr(spark: SparkSession, sf_dir: str) -> int:
     total = 0
     for _ in range(_PPR_ITERS):
         live_edges = edges.join(
-            F.broadcast(reach), edges["u"] == reach["node"]
+            reach, edges["u"] == reach["node"]
         )
         total += live_edges.count()
         reach = (
@@ -1596,13 +1586,11 @@ def graph_neighborhood_function(
         .localCheckpoint(eager=True)
     )
     sizes = labels.groupBy("comp").agg(F.count(F.lit(1)).alias("sz"))
-    # sizes is metadata-sized (one row per component) — broadcast the
-    # membership filter instead of shuffling the label table.
     kept = labels.join(
-        F.broadcast(sizes.filter(F.col("sz") <= _ANF_COMPONENT_CAP)), "comp"
+        sizes.filter(F.col("sz") <= _ANF_COMPONENT_CAP), "comp"
     ).select("node")
     cov = labels.agg(F.count(F.lit(1)).alias("n_lab")).crossJoin(
-        F.broadcast(kept.agg(F.count(F.lit(1)).alias("n_kept")))
+        kept.agg(F.count(F.lit(1)).alias("n_kept"))
     ).select(
         F.col("n_kept").cast("long").alias("n_nodes_in_scope"),
         (F.col("n_lab") - F.col("n_kept"))
@@ -1671,7 +1659,7 @@ def _probe_neighborhood(spark: SparkSession, sf_dir: str) -> int:
     )
     sizes = labels.groupBy("comp").agg(F.count(F.lit(1)).alias("sz"))
     kept = labels.join(
-        F.broadcast(sizes.filter(F.col("sz") <= _ANF_COMPONENT_CAP)), "comp"
+        sizes.filter(F.col("sz") <= _ANF_COMPONENT_CAP), "comp"
     ).select("node")
     sym = _undirected(
         pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
@@ -1705,28 +1693,19 @@ def _probe_neighborhood(spark: SparkSession, sf_dir: str) -> int:
 
 _HB_ROUNDS = 2
 
-#: Broadcast gate for the per-round register-merge join: the register
-#: table is |regs| rows of three ints (~24 B/row), so 2M rows ≈ 50 MB —
-#: comfortably broadcastable on any executor profile.  Beyond the gate
-#: (billions of nodes at 100 TB) the merge falls back to the shuffle
-#: join; tests/test_forced_paths.py drives that branch with the gate
-#: monkeypatched to 0 and asserts identical registers.
-_HB_BROADCAST_MAX_ROWS = 2_000_000
-
-
 def _hb_merge_round(sym: DataFrame, regs: DataFrame) -> DataFrame:
     """One HyperBall round: ship every node's register set across each
     edge and bucket-max-merge.  The join fan-in is sum_v deg(v) *
     |regs(v)| rows (the sketch's inherent cost — see the work probes);
     what is NOT inherent is paying a shuffle of BOTH sides to arrange
-    it: below the gate the register table broadcasts, so the fan-in
-    streams map-side out of the (checkpointed) edge partitions straight
-    into the partial max — measured 17.2 s -> 9.4 s for the two-round
-    loop at sf0.1.  regs must be checkpointed by the caller (it is
-    referenced twice)."""
-    small = regs.count() <= _HB_BROADCAST_MAX_ROWS
-    rside = F.broadcast(regs) if small else regs
-    nbr = rside.join(sym, rside["node"] == sym["v"]).select(
+    it: while the register table is under autoBroadcastJoinThreshold
+    the planner broadcasts it, so the fan-in streams map-side out of
+    the (checkpointed) edge partitions straight into the partial max
+    (measured 17.2 s -> 9.4 s for the two-round loop at sf0.1 against
+    the shuffle join); above it the merge is a shuffle join, which
+    tests/test_forced_paths.py checks gives identical registers.  regs
+    must be checkpointed by the caller (it is referenced twice)."""
+    nbr = regs.join(sym, regs["node"] == sym["v"]).select(
         sym["u"].alias("node"), "bucket", "m_rho"
     )
     return (
@@ -2037,7 +2016,7 @@ def graph_jaccard_neighbors_top20(
     )
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     kept = sym.join(
-        F.broadcast(deg.filter(F.col("d") <= _CN_DEG_CAP).select("u")), "u"
+        deg.filter(F.col("d") <= _CN_DEG_CAP).select("u"), "u"
     )
     ndeg = kept.groupBy("v").agg(F.count(F.lit(1)).alias("nd"))
     a, b = kept.alias("a"), kept.alias("b")
@@ -2052,8 +2031,8 @@ def graph_jaccard_neighbors_top20(
     dx = ndeg.select(F.col("v").alias("x"), F.col("nd").alias("ndx"))
     dy = ndeg.select(F.col("v").alias("y"), F.col("nd").alias("ndy"))
     scored = (
-        counts.join(F.broadcast(dx), "x")
-        .join(F.broadcast(dy), "y")
+        counts.join(dx, "x")
+        .join(dy, "y")
         .select(
             "x",
             "y",
@@ -2324,7 +2303,7 @@ def graph_degree_assortativity(
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     du = deg.select(F.col("u"), F.col("d").alias("x"))
     dv = deg.select(F.col("u").alias("v"), F.col("d").alias("y"))
-    ed = sym.join(F.broadcast(du), "u").join(F.broadcast(dv), "v")
+    ed = sym.join(du, "u").join(dv, "v")
     mom = ed.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("x").alias("sx"),
@@ -2682,7 +2661,7 @@ def graph_rich_club_coefficient(
     ce = (
         pairs.join(da, "doc_a")
         .join(db, "doc_b")
-        .crossJoin(F.broadcast(ks.withColumnRenamed("k", "kk")))
+        .crossJoin(ks.withColumnRenamed("k", "kk"))
         .filter((F.col("da") > F.col("kk")) & (F.col("db") > F.col("kk")))
         .groupBy(F.col("kk").alias("k"))
         .agg(F.count(F.lit(1)).alias("n_edges"))
@@ -2787,7 +2766,7 @@ def graph_effective_diameter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Each N(r) is one sum over the per-node estimates (exact int64
     register sums per node; one cross-row double sum rounded at 4 dp —
     absolute error ~1e-10 against a 1e5-magnitude total).  Same
-    size-gated broadcast merge rounds (_hb_merge_round), so the whole
+    broadcast merge rounds (_hb_merge_round), so the whole
     query costs the anf sketch minus its eval stage."""
     from ..functions import hll
 
@@ -2856,8 +2835,7 @@ def _bfs_oracle() -> str:
         for k in range(_BFS_R + 1)
     )
     return f"""
-    {_PS_EDGES_SQL},
-    edges AS (SELECT u, v FROM e0 UNION ALL SELECT v AS u, u AS v FROM e0),
+    {_PS_UNDIRECTED_SQL},
     deg AS (SELECT u, count(*) AS d FROM edges GROUP BY u),
     seed AS (SELECT u AS node FROM deg ORDER BY d DESC, u LIMIT 1),
     d0 AS (SELECT node FROM seed),
@@ -2953,8 +2931,7 @@ def _closeness_oracle() -> str:
         for k in range(_CLO_R + 1)
     )
     return f"""
-    {_PS_EDGES_SQL},
-    edges AS (SELECT u, v FROM e0 UNION ALL SELECT v AS u, u AS v FROM e0),
+    {_PS_UNDIRECTED_SQL},
     deg AS (SELECT u, count(*) AS d FROM edges GROUP BY u),
     seeds AS (SELECT u AS seed FROM deg ORDER BY d DESC, u
               LIMIT {_CLO_SEEDS}),
@@ -3050,8 +3027,7 @@ def _walk_centrality_oracle() -> str:
         )
     joined = ",\n    ".join(rounds)
     return f"""
-    {_PS_EDGES_SQL},
-    edges AS (SELECT u, v FROM e0 UNION ALL SELECT v AS u, u AS v FROM e0),
+    {_PS_UNDIRECTED_SQL},
     nodes AS (SELECT DISTINCT u AS node FROM edges),
     r0 AS (SELECT node, CAST(1 AS BIGINT) AS pr FROM nodes),
     {joined}
@@ -3115,8 +3091,7 @@ def graph_walk_centrality_top20(
 @register(
     "graph_degree_gini",
     oracle=f"""
-    {_PS_EDGES_SQL},
-    edges AS (SELECT u, v FROM e0 UNION ALL SELECT v AS u, u AS v FROM e0),
+    {_PS_UNDIRECTED_SQL},
     deg AS (SELECT u AS node, CAST(count(*) AS BIGINT) AS d
             FROM edges GROUP BY u),
     ranked AS (

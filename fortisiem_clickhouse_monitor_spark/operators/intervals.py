@@ -144,7 +144,7 @@ def interval_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     runs = local.join(
-        F.broadcast(carry), ["event_type", "bucket"]
+        carry, ["event_type", "bucket"]
     ).withColumn("running", (F.col("run_local") + F.col("carry")).cast("long"))
 
     peaks = (

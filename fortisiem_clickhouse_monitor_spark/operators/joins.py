@@ -4,8 +4,8 @@ disjunctive-key first-match enrichment (J2), scalar-subquery rewrite
 joins the TPC-H-ish correctness corpus requires.
 
 Scale notes: every dimension here (region/nation/supplier, inline
-fixtures) is tiny relative to the facts, so the plans hint
-``F.broadcast`` explicitly — at 100 TB the fact table never shuffles
+fixtures) is tiny relative to the facts, so the planner broadcasts it
+(autoBroadcastJoinThreshold) — at 100 TB the fact table never shuffles
 for these joins; only fact⋈fact joins (lineitem⋈orders) shuffle, on
 their join key, and AQE handles skew splitting.
 """
@@ -52,9 +52,7 @@ def join_broadcast_lookup_default(spark: SparkSession, sf_dir: str) -> DataFrame
         .filter(F.col("r_regionkey") <= 2)
         .select("n_nationkey", "r_name")
     )
-    return c.join(
-        F.broadcast(dim), c["c_nationkey"] == dim["n_nationkey"], "left"
-    ).select(
+    return c.join(dim, c["c_nationkey"] == dim["n_nationkey"], "left").select(
         "c_custkey",
         F.coalesce(F.col("r_name"), F.lit("Unknown Shard")).alias("shard"),
     )
@@ -128,7 +126,7 @@ def join_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem")
     avg_price = li.agg(F.avg("l_extendedprice").alias("global_avg"))
     return (
-        li.crossJoin(F.broadcast(avg_price))
+        li.crossJoin(avg_price)
         .filter(F.col("l_extendedprice") > F.col("global_avg"))
         .groupBy("l_returnflag")
         .agg(F.count(F.lit(1)).alias("n_above"))
@@ -229,7 +227,7 @@ def join_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
+        .join(c, o["o_custkey"] == c["c_custkey"])
         .groupBy("o_orderkey", "o_orderdate")
         .agg(
             F.round(
@@ -266,7 +264,7 @@ def join_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame
         table(spark, sf_dir, t)
         for t in ("lineitem", "orders", "customer", "supplier", "nation", "region")
     )
-    asia_nations = F.broadcast(
+    asia_nations = (
         n.join(r, n["n_regionkey"] == r["r_regionkey"])
         .filter(F.col("r_name") == "ASIA")
         .select("n_nationkey", "n_name")
@@ -275,7 +273,7 @@ def join_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame
         li.join(o, li["l_orderkey"] == o["o_orderkey"])
         .join(c, o["o_custkey"] == c["c_custkey"])
         .join(
-            F.broadcast(s),
+            s,
             (li["l_suppkey"] == s["s_suppkey"])
             & (s["s_nationkey"] == c["c_nationkey"]),
         )
@@ -309,7 +307,7 @@ def join_part_supplier_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem")
     p = table(spark, sf_dir, "part").filter(F.col("p_size") >= 20)
     return (
-        li.join(F.broadcast(p), li["l_partkey"] == p["p_partkey"])
+        li.join(p, li["l_partkey"] == p["p_partkey"])
         .groupBy("p_brand")
         .agg(
             F.count(F.lit(1)).alias("n_lineitems"),
@@ -533,9 +531,9 @@ def join_bloom_semi_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         " CAST(p % 64 AS INT)) & 1L) = 1L)"
     )
     return (
-        probe.crossJoin(F.broadcast(bitmap))
+        probe.crossJoin(bitmap)
         .join(
-            F.broadcast(build.withColumn("matched", F.lit(True))),
+            build.withColumn("matched", F.lit(True)),
             probe["c_custkey"] == F.col("k"),
             "left",
         )

@@ -344,8 +344,8 @@ def linkage_blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         n_records.crossJoin(F.broadcast(closed))
-        .crossJoin(F.broadcast(true_matches))
-        .crossJoin(F.broadcast(found))
+        .crossJoin(true_matches)
+        .crossJoin(found)
         .select(
             "n_records",
             "n_block_pairs",
@@ -479,8 +479,8 @@ def linkage_fellegi_sunter_scores(
         F.col("cents").alias("cents_b"),
     )
     scored = (
-        cand.join(F.broadcast(a), "custkey_a")
-        .join(F.broadcast(b), "custkey_b")
+        cand.join(a, "custkey_a")
+        .join(b, "custkey_b")
         .select(
             "custkey_a",
             "custkey_b",

@@ -66,7 +66,7 @@ def pipeline_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     keepers = d.groupBy(fp.alias("fp")).agg(F.min("doc_id").alias("doc_id"))
     n_pieces = F.size(F.regexp_extract_all("text", F.lit(_BPE), 0))
     gated = (
-        d.join(F.broadcast(keepers.select("doc_id")), "doc_id")
+        d.join(keepers.select("doc_id"), "doc_id")
         .filter(
             (F.col("n_chars") >= _MIN_CHARS)
             & F.col("lang").isin(*_ALLOWED_LANGS)

@@ -131,10 +131,8 @@ def quality_fk_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     Zero rows of drift is a merge-gate precondition for the incremental
     rollup / SCD2 operators downstream."""
 
-    def orphans(fact, fk, dim, pk, label, bcast=True):
+    def orphans(fact, fk, dim, pk, label):
         dimkeys = dim.select(pk)
-        if bcast:
-            dimkeys = F.broadcast(dimkeys)
         return (
             fact.join(dimkeys, fact[fk] == dimkeys[pk], "left_anti")
             .agg(F.count(F.lit(1)).alias("n_orphans"))
@@ -148,7 +146,7 @@ def quality_fk_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "orders.custkey->customer")
         .unionByName(
             orphans(li, "l_orderkey", o, "o_orderkey",
-                    "lineitem.orderkey->orders", bcast=False))
+                    "lineitem.orderkey->orders"))
         .unionByName(
             orphans(li, "l_partkey", table(spark, sf_dir, "part"), "p_partkey",
                     "lineitem.partkey->part"))
@@ -246,7 +244,7 @@ def profile_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("s").alias("s_b"),
         F.col("ss").alias("ss_b"),
     )
-    ab = a.join(F.broadcast(b), "dim")
+    ab = a.join(b, "dim")
     na, nb = F.col("n_a").cast("double"), F.col("n_b").cast("double")
     mean_a = F.col("s_a") / (F.col("n_a") * float(_DRIFT_GRID))
     mean_b = F.col("s_b") / (F.col("n_b") * float(_DRIFT_GRID))
@@ -360,7 +358,7 @@ def _halved(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min(t) + F.expr("(max(unix_timestamp(ts)) - min(unix_timestamp(ts))) div 2")
         ).alias("mid")
     )
-    return ev.crossJoin(F.broadcast(mid)).select(
+    return ev.crossJoin(mid).select(
         "event_type", "value", (t <= F.col("mid")).alias("early")
     )
 
@@ -515,7 +513,7 @@ def drift_chi2_type_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("mid")
     )
     o = (
-        ev.crossJoin(F.broadcast(mid))
+        ev.crossJoin(mid)
         .groupBy("event_type")
         .agg(
             F.sum(F.when(t <= F.col("mid"), 1).otherwise(0)).alias("o_early"),
@@ -739,7 +737,7 @@ def profile_join_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("cnt").alias("max_cnt"),
         )
         hot = (
-            counts.crossJoin(F.broadcast(stats))
+            counts.crossJoin(stats)
             .filter(
                 F.col("cnt") * F.col("n_keys")
                 > _SKEW_HOT_X * F.col("n_rows")
@@ -747,7 +745,7 @@ def profile_join_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("n_hot_keys"))
         )
         outs.append(
-            stats.crossJoin(F.broadcast(hot)).select(
+            stats.crossJoin(hot).select(
                 F.lit(label).alias("key_name"),
                 "n_rows",
                 "n_keys",
@@ -991,7 +989,7 @@ def quality_benford_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     for d, m in _BENFORD_MICRO.items():
         exp = F.when(F.col("digit") == d, F.lit(m)).otherwise(exp)
     obs = F.expr("CAST(n * 1000000 div total AS BIGINT)")
-    return counts.crossJoin(F.broadcast(tot)).select(
+    return counts.crossJoin(tot).select(
         "digit",
         "n",
         obs.alias("obs_micro"),
@@ -1346,7 +1344,7 @@ def layout_zone_map_prune_eval(
     probes = (
         spark.range(_ZONE_PROBES)
         .withColumnRenamed("id", "probe_id")
-        .crossJoin(F.broadcast(dom))
+        .crossJoin(dom)
         .select(
             "probe_id",
             F.expr(
@@ -1372,7 +1370,7 @@ def layout_zone_map_prune_eval(
         F.col("max_chars") >= F.col("ch_lo")
     )
     return (
-        files.crossJoin(F.broadcast(probes))
+        files.crossJoin(probes)
         .groupBy("probe_id")
         .agg(
             F.count(F.lit(1)).alias("n_files"),
@@ -1458,8 +1456,8 @@ def drift_psi_value_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rng = ev.agg(F.min("value").alias("lo"), F.max("value").alias("hi"))
     binned = (
-        ev.crossJoin(F.broadcast(mid))
-        .crossJoin(F.broadcast(rng))
+        ev.crossJoin(mid)
+        .crossJoin(rng)
         .select(
             "event_type",
             F.least(
@@ -1873,7 +1871,7 @@ def drift_js_divergence_type_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("mid")
     )
     cnt = (
-        ev.crossJoin(F.broadcast(mid))
+        ev.crossJoin(mid)
         .groupBy("event_type")
         .agg(
             F.sum(F.when(t <= F.col("mid"), 1).otherwise(0))
@@ -2047,7 +2045,7 @@ def profile_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines and no cross-row float sum enters the hash."""
     ev = table(spark, sf_dir, "events")
     rng = ev.agg(F.min("value").alias("lo"), F.max("value").alias("hi"))
-    binned = ev.crossJoin(F.broadcast(rng)).select(
+    binned = ev.crossJoin(rng).select(
         "event_type",
         F.least(
             F.floor(

@@ -311,7 +311,7 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cos = F.round(vectors.cosine(F.col("embedding"), F.col("qe")), 6)
     return (
         e.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
+        .crossJoin(q)
         .select("vec_id", "label", cos.alias("cos_sim"))
         .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
         .limit(10)
@@ -351,7 +351,7 @@ def sim_ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cos = F.round(vectors.cosine(F.col("embedding"), F.col("qe")), 6)
     return (
-        sigs.crossJoin(F.broadcast(q))
+        sigs.crossJoin(q)
         .filter((F.col("bucket") == F.col("qb")) & (F.col("vec_id") != 0))
         .select("vec_id", "label", "bucket", cos.alias("cos_sim"))
         .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
@@ -399,7 +399,7 @@ def sim_label_centroid_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "label", (F.col("dim0") + 1).alias("dim"), F.col("x").cast("double").alias("x")
     )
     centroids = flat.groupBy("label", "dim").agg(F.avg("x").alias("cx"))
-    joined = flat.join(F.broadcast(centroids), ["label", "dim"])
+    joined = flat.join(centroids, ["label", "dim"])
     return (
         joined.groupBy("vec_id", "label")
         .agg(
@@ -468,7 +468,7 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids = flat.groupBy("label", "dim").agg(F.avg("x").alias("cx"))
     qflat = flat.filter(F.col("vec_id") == 0).select("dim", F.col("x").alias("qx"))
     cent_scores = (
-        centroids.join(F.broadcast(qflat), "dim")
+        centroids.join(qflat, "dim")
         .groupBy("label")
         .agg(
             (
@@ -484,9 +484,9 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qe"))
     cos = F.round(vectors.cosine(F.col("embedding"), F.col("qe")), 6)
     return (
-        e.join(F.broadcast(probe), "label")
+        e.join(probe, "label")
         .filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
+        .crossJoin(q)
         .select("vec_id", "label", cos.alias("cos_sim"))
         .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
         .limit(10)
@@ -1105,7 +1105,7 @@ def sim_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ne").alias("nq"),
     )
     pairs = sigs.join(
-        F.broadcast(q), sigs["vec_id"] != q["qid"]
+        q, sigs["vec_id"] != q["qid"]
     ).select(
         "qid",
         "qb",
@@ -1254,7 +1254,7 @@ def sim_lsh_multiprobe_recall_eval(
     probes = q.select(
         "qid", "qb", F.explode(flips).alias("flip")
     ).select("qid", F.expr("qb ^ flip").alias("pb"))
-    pairs = sigs.join(F.broadcast(q), sigs["vec_id"] != q["qid"]).select(
+    pairs = sigs.join(q, sigs["vec_id"] != q["qid"]).select(
         "qid",
         "vec_id",
         "bucket",
@@ -1277,7 +1277,7 @@ def sim_lsh_multiprobe_recall_eval(
     )
     cand = (
         pairs.join(
-            F.broadcast(probes),
+            probes,
             (pairs["qid"] == probes["qid"]) & (pairs["bucket"] == probes["pb"]),
         )
         .select(pairs["qid"], "vec_id", "c")
@@ -1427,7 +1427,7 @@ def sim_ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("carr")
         )
     )
-    cscore = q.crossJoin(F.broadcast(cent)).select(
+    cscore = q.crossJoin(cent).select(
         "qid", "label", vectors.cosine(F.col("carr"), F.col("qe")).alias("ccos")
     )
     wq = Window.partitionBy("qid").orderBy(F.desc("ccos"), F.asc("label"))
@@ -1436,7 +1436,7 @@ def sim_ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") <= _IVF_NPROBE)
         .select("qid", "label")
     )
-    pairs = e.join(F.broadcast(q), e["vec_id"] != q["qid"]).select(
+    pairs = e.join(q, e["vec_id"] != q["qid"]).select(
         "qid",
         "vec_id",
         "label",
@@ -1621,7 +1621,7 @@ def sim_ivf_nprobe_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("carr")
         )
     )
-    cscore = q.crossJoin(F.broadcast(cent)).select(
+    cscore = q.crossJoin(cent).select(
         "qid", "label", vectors.cosine(F.col("carr"), F.col("qe")).alias("ccos")
     )
     wq = Window.partitionBy("qid").orderBy(F.desc("ccos"), F.asc("label"))
@@ -1636,9 +1636,9 @@ def sim_ivf_nprobe_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("nprobe")
     )
     pn = probes.join(
-        F.broadcast(np_df), probes["rn"] <= F.col("nprobe")
+        np_df, probes["rn"] <= F.col("nprobe")
     ).select("nprobe", "qid", "label")
-    pairs = e.join(F.broadcast(q), e["vec_id"] != q["qid"]).select(
+    pairs = e.join(q, e["vec_id"] != q["qid"]).select(
         "qid",
         "vec_id",
         "label",
@@ -1760,7 +1760,7 @@ def sim_truncation_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ne").alias("nq"),
         F.col("ne_tr").alias("nq_tr"),
     )
-    pairs = e.join(F.broadcast(q), e["vec_id"] != q["qid"]).select(
+    pairs = e.join(q, e["vec_id"] != q["qid"]).select(
         "qid",
         "vec_id",
         F.round(
@@ -1892,10 +1892,8 @@ def sim_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "vec_id",
     )
-    cb = F.broadcast(
-        e.filter(F.col("vec_id") < _PQ_K).select(
-            F.col("vec_id").cast("int").alias("cid"), F.col("qv").alias("qc")
-        )
+    cb = e.filter(F.col("vec_id") < _PQ_K).select(
+        F.col("vec_id").cast("int").alias("cid"), F.col("qv").alias("qc")
     )
     d = e.crossJoin(cb)
     dist = [
@@ -2046,7 +2044,7 @@ def sim_pq_adc_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda acc, x: acc + x,
         )
 
-    d = e.filter(F.col("vec_id") != 0).crossJoin(F.broadcast(cb))
+    d = e.filter(F.col("vec_id") != 0).crossJoin(cb)
     scored = d.select(
         "vec_id", "cid", *[sub_dist("qv", "qc", s).alias(f"d{s}") for s in range(_PQ_M)]
     )
@@ -2057,7 +2055,7 @@ def sim_pq_adc_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             for s in range(_PQ_M)
         ]
     )
-    lut = cb.crossJoin(F.broadcast(q)).select(
+    lut = cb.crossJoin(q).select(
         "cid", *[sub_dist("qq", "qc", s).alias(f"l{s}") for s in range(_PQ_M)]
     )
     adc = m
@@ -2068,7 +2066,7 @@ def sim_pq_adc_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     adc = adc.select("vec_id", adist.alias("adist"))
     exact = (
         e.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
+        .crossJoin(q)
         .select(
             "vec_id",
             F.aggregate(
@@ -2084,7 +2082,7 @@ def sim_pq_adc_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid2 = float(_PQ_GRID) ** 2
     return (
         adc.join(exact, "vec_id")
-        .join(F.broadcast(top), adc["vec_id"] == F.col("tvid"), "left")
+        .join(top, adc["vec_id"] == F.col("tvid"), "left")
         .orderBy("adist", "vec_id")
         .limit(10)
         .select(
@@ -2269,10 +2267,7 @@ def sim_pq_trained_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     for _ in range(_PQ_TI):
         a = assign(cent)
-        # assignments are narrow (vec_id, s, cid) — broadcast them onto
-        # the checkpointed subvector frame (LogicalRDDs carry no size
-        # stats, so without the hint this fell back to SMJ).
-        av = F.broadcast(a).join(sub, ["vec_id", "s"]).select(
+        av = a.join(sub, ["vec_id", "s"]).select(
             "s", "cid", F.posexplode("v").alias("dim0", "x")
         )
         upd = (
@@ -2300,8 +2295,7 @@ def sim_pq_trained_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         # chained, the training subtree re-executed once per consumer
         # per round (exponential in rounds; the r8-before plan dup).
         cent = (
-            # upd is codebook-cardinality (M*K rows) — broadcast.
-            cent.join(F.broadcast(upd), ["s", "cid"], "left")
+            cent.join(upd, ["s", "cid"], "left")
             .select(
                 "s", "cid", F.coalesce(F.col("cu"), F.col("c")).alias("c")
             )
@@ -2312,7 +2306,7 @@ def sim_pq_trained_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     qsub = sub.filter(F.col("vec_id") == 0).select(
         "s", F.col("v").alias("qv_s")
     )
-    lut = cent.join(F.broadcast(qsub), "s").select(
+    lut = cent.join(qsub, "s").select(
         "s", "cid", sdist("qv_s", "c").alias("l")
     )
     adc = (
@@ -2323,7 +2317,7 @@ def sim_pq_trained_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = eq.filter(F.col("vec_id") == 0).select(F.col("qv").alias("qq"))
     exact = (
         eq.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
+        .crossJoin(q)
         .select(
             "vec_id",
             F.aggregate(
@@ -2341,11 +2335,12 @@ def sim_pq_trained_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid2 = float(_PQ_GRID) ** 2
     return (
         # SHUFFLED HASH, not broadcast (ADVICE r8): exact is
-        # vector-cardinality (unbounded at scale); the hint still
-        # avoids the stats-less SMJ default without a mandatory
+        # vector-cardinality (unbounded at scale).  Without the hint
+        # the planner sort-merge joins it at sf0.01 and sf0.1 (plan
+        # diff); the hash join skips that sort without a mandatory
         # driver-side build of the full exact ranking.
         adc.join(exact.hint("shuffle_hash"), "vec_id")
-        .join(F.broadcast(top), adc["vec_id"] == F.col("tvid"), "left")
+        .join(top, adc["vec_id"] == F.col("tvid"), "left")
         .orderBy("adist", "vec_id")
         .limit(10)
         .select(
@@ -2498,7 +2493,7 @@ def sim_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dim", F.col("x").alias("qx")
     )
     cent_scores = (
-        centroids.join(F.broadcast(qflat), "dim")
+        centroids.join(qflat, "dim")
         .groupBy("label")
         .agg(
             (
@@ -2539,8 +2534,8 @@ def sim_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda acc, x: acc + x,
         )
 
-    cand = eq.filter(F.col("vec_id") != 0).join(F.broadcast(probe), "label")
-    scored = cand.crossJoin(F.broadcast(cb)).select(
+    cand = eq.filter(F.col("vec_id") != 0).join(probe, "label")
+    scored = cand.crossJoin(cb).select(
         "vec_id", "label", "cid",
         *[sub_dist("qv", "qc", s).alias(f"d{s}") for s in range(_PQ_M)],
     )
@@ -2551,7 +2546,7 @@ def sim_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             for s in range(_PQ_M)
         ]
     )
-    lut = cb.crossJoin(F.broadcast(q)).select(
+    lut = cb.crossJoin(q).select(
         "cid", *[sub_dist("qq", "qc", s).alias(f"l{s}") for s in range(_PQ_M)]
     )
     adc = m
@@ -2560,7 +2555,7 @@ def sim_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         adc = adc.join(F.broadcast(ls), F.col(f"m{s}.c") == F.col(f"c{s}"))
     adist = sum(F.col(f"l{s}") for s in range(1, _PQ_M)) + F.col("l0")
     adc = adc.select("vec_id", "label", adist.alias("adist"))
-    exact = cand.crossJoin(F.broadcast(q)).select(
+    exact = cand.crossJoin(q).select(
         "vec_id",
         F.aggregate(
             F.zip_with("qv", "qq", lambda x, y: (x - y) * (x - y)),
@@ -2686,7 +2681,7 @@ def ivf_pq_topk_from_index(
         )
     )
     cent_scores = (
-        flatc.join(F.broadcast(qflat), "dim")
+        flatc.join(qflat, "dim")
         .groupBy("label")
         .agg(
             (
@@ -2721,15 +2716,15 @@ def ivf_pq_topk_from_index(
             lambda acc, x: acc + x,
         )
 
-    lut = cb.crossJoin(F.broadcast(q)).select(
+    lut = cb.crossJoin(q).select(
         "cid", *[sub_dist("qq", "qc", s).alias(f"l{s}") for s in range(_PQ_M)]
     )
-    adc = codes.join(F.broadcast(probe), "label").filter(
+    adc = codes.join(probe, "label").filter(
         F.col("vec_id") != 0
     )
     for s in range(_PQ_M):
         ls = lut.select(F.col("cid").alias(f"c{s}"), f"l{s}")
-        adc = adc.join(F.broadcast(ls), F.col(f"code_{s}") == F.col(f"c{s}"))
+        adc = adc.join(ls, F.col(f"code_{s}") == F.col(f"c{s}"))
     adist = sum(F.col(f"l{s}") for s in range(1, _PQ_M)) + F.col("l0")
     adc = adc.select("vec_id", "label", adist.alias("adist"))
     eq = e.select(
@@ -2741,7 +2736,7 @@ def ivf_pq_topk_from_index(
     )
     exact = (
         eq.join(adc.select("vec_id"), "vec_id")
-        .crossJoin(F.broadcast(q))
+        .crossJoin(q)
         .select(
             "vec_id",
             F.aggregate(
@@ -2823,7 +2818,7 @@ def sim_mips_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ip = F.round(vectors.dot(F.col("embedding"), F.col("qe")), 6)
     scored = (
         e.filter(F.col("vec_id") >= _MIPS_NQ)
-        .crossJoin(F.broadcast(q))
+        .crossJoin(q)
         .select("query_id", "vec_id", "label", ip.alias("ip"))
     )
     w1 = Window.partitionBy(
@@ -3018,7 +3013,7 @@ def sim_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     simq = F.round(vectors.cosine(F.col("embedding"), F.col("qe")), 6)
     cand = (
         e.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
+        .crossJoin(q)
         .select("vec_id", simq.alias("simq"), "embedding")
         .orderBy(F.desc("simq"), F.asc("vec_id"))
         .limit(_MMR_CAND)
@@ -3314,7 +3309,7 @@ def sim_dim_correlation_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         pairs.join(F.broadcast(a), "di")
         .join(F.broadcast(b), "dj")
-        .crossJoin(F.broadcast(nn))
+        .crossJoin(nn)
         .filter((var_a > 0) & (var_b > 0))
         .select("di", "dj", corr.alias("corr_r"))
         .orderBy(F.abs(F.col("corr_r")).desc(), F.asc("di"), F.asc("dj"))
@@ -3446,7 +3441,7 @@ def sim_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("carr")
         )
     )
-    cscore = q.crossJoin(F.broadcast(cent)).select(
+    cscore = q.crossJoin(cent).select(
         "qid", "label", vectors.cosine(F.col("carr"), F.col("qe")).alias("ccos")
     )
     wq = Window.partitionBy("qid").orderBy(F.desc("ccos"), F.asc("label"))
@@ -3455,7 +3450,7 @@ def sim_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") <= _IVF_NPROBE)
         .select("qid", "label")
     )
-    pairs = e.join(F.broadcast(q), e["vec_id"] != q["qid"]).select(
+    pairs = e.join(q, e["vec_id"] != q["qid"]).select(
         "qid",
         "vec_id",
         "label",
@@ -3763,7 +3758,7 @@ def sim_hamming_sign_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("w1").alias("q1"),
         )
     )
-    pairs = F.broadcast(q).join(
+    pairs = q.join(
         codes, F.col("vec_id") != F.col("query_id")
     )
     ham = F.expr("bit_count(q0 ^ w0) + bit_count(q1 ^ w1)").cast("long")

@@ -71,7 +71,7 @@ def slo_burn_rate_multiwindow(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integers."""
     ev = table(spark, sf_dir, "events")
     mx = ev.agg(F.max("ts").alias("mx"))
-    e = ev.crossJoin(F.broadcast(mx))
+    e = ev.crossJoin(mx)
     in_short = F.col("ts") > F.col("mx") - F.expr(
         f"INTERVAL {_BURN_SHORT_H} HOUR"
     )
@@ -181,7 +181,7 @@ def changepoint_cusum_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("day")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    pre = daily.join(F.broadcast(med), "event_type").withColumn(
+    pre = daily.join(med, "event_type").withColumn(
         "p2", F.sum(2 * F.col("n") - F.col("med2")).over(w)
     )
     cusum2 = F.col("p2") - F.least(F.min("p2").over(w), F.lit(0))
@@ -240,7 +240,7 @@ def seasonal_dow_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
     resid2 = 2 * F.col("n") - F.col("med2")
     return (
         daily.withColumn("dow", F.dayofweek("day"))
-        .join(F.broadcast(base), ["event_type", "dow"])
+        .join(base, ["event_type", "dow"])
         .select(
             "event_type",
             "day",
@@ -307,7 +307,7 @@ def availability_active_minutes(spark: SparkSession, sf_dir: str) -> DataFrame:
     act = ev.groupBy("event_type").agg(
         F.countDistinct(F.date_trunc("minute", "ts")).alias("active_minutes")
     )
-    return act.crossJoin(F.broadcast(span)).select(
+    return act.crossJoin(span).select(
         "event_type",
         "active_minutes",
         "span_minutes",
@@ -417,7 +417,7 @@ def reliability_mttr_mtbf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_errors").cast("long").alias("n_error_events"),
         F.sum(F.col("t1") - F.col("t0")).cast("long").alias("total_repair_s"),
     )
-    return agg.crossJoin(F.broadcast(gsum)).select(
+    return agg.crossJoin(gsum).select(
         "n_incidents",
         "n_error_events",
         "total_repair_s",

@@ -412,7 +412,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = tc.agg(
         F.sum("c").alias("total"), F.count(F.lit(1)).alias("vocab")
     )
-    probs = tc.crossJoin(F.broadcast(tot)).select(
+    probs = tc.crossJoin(tot).select(
         "term",
         F.log((F.col("c") + 1.0) / (F.col("total") + F.col("vocab"))).alias("lp"),
     )
@@ -524,8 +524,8 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lp_tbl = (
         bc.withColumn("a", F.split_part("gram", F.lit(" "), F.lit(1)))
-        .join(F.broadcast(ctx), "a")
-        .crossJoin(F.broadcast(vocab))
+        .join(ctx, "a")
+        .crossJoin(vocab)
         .select(
             "gram",
             F.log((F.col("cab") + 1.0) / (F.col("ca") + F.col("v"))).alias("lp"),
@@ -598,9 +598,9 @@ def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = freq.select(
         "f", F.row_number().over(Window.orderBy(F.desc("f"), "w")).alias("r")
     ).filter(F.col("r") <= _ZIPF_TOP)
-    # 1-row crossJoin broadcast: the vocab total rides along without a
-    # driver-side action (the repo's broadcast-totals pattern).
-    return ranked.crossJoin(F.broadcast(vocab_n)).agg(
+    # 1-row crossJoin: the vocab total rides along without a
+    # driver-side action.
+    return ranked.crossJoin(vocab_n).agg(
         F.first("n_vocab").alias("n_vocab"),
         F.count(F.lit(1)).alias("n_fit"),
         F.expr(
@@ -802,8 +802,8 @@ def corpus_source_overlap_matrix(
         F.col("source").alias("src_b"), F.col("n").alias("n_b")
     )
     return (
-        pair.join(F.broadcast(ta), "src_a")
-        .join(F.broadcast(tb), "src_b")
+        pair.join(ta, "src_a")
+        .join(tb, "src_b")
         .select(
             "src_a",
             "src_b",
@@ -887,7 +887,7 @@ def text_heaps_law_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = table(spark, sf_dir, "documents")
     mx = d.agg(F.max("doc_id").alias("mx"))
-    per_doc = d.crossJoin(F.broadcast(mx)).select(
+    per_doc = d.crossJoin(mx).select(
         "doc_id",
         F.expr("(doc_id * 10) div (mx + 1)").alias("bucket"),
         F.size(tokens(F.col("text"))).alias("n_tokens"),
@@ -905,7 +905,7 @@ def text_heaps_law_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("doc_id").alias("first_doc"))
     )
     vocab_new = (
-        firsts.crossJoin(F.broadcast(mx))
+        firsts.crossJoin(mx)
         .groupBy(F.expr("(first_doc * 10) div (mx + 1)").alias("bucket"))
         .agg(F.count(F.lit(1)).alias("vocab_new"))
     )
@@ -1070,7 +1070,7 @@ def text_lang_id_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("s_rc")
         )
     )
-    return tot.crossJoin(F.broadcast(rc)).select(
+    return tot.crossJoin(rc).select(
         "n_docs",
         "n_agree",
         F.round(F.col("n_agree").cast("double") / F.col("n_docs"), 6).alias(
@@ -1483,7 +1483,7 @@ def vocab_burstiness_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     nd = d.agg(F.count(F.lit(1)).alias("n_docs"))
     return (
         stats.filter(F.col("cf") >= _BURST_MIN_CF)
-        .crossJoin(F.broadcast(nd))
+        .crossJoin(nd)
         .select(
             F.col("w").alias("term"),
             "cf",
@@ -1591,9 +1591,7 @@ def text_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = hs.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     last_start = F.greatest(F.col("n_sh") - _WINNOW_W + 1, F.lit(1))
     win = (
-        # m is doc-cardinality; without the hint the stats-less
-        # checkpoint scan falls back to SMJ.
-        hs.join(F.broadcast(m), "doc_id")
+        hs.join(m, "doc_id")
         .select(
             "doc_id",
             "i",
@@ -1615,7 +1613,7 @@ def text_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("sel.h").alias("sel_h"),
     ).distinct()
     return (
-        fps.join(F.broadcast(m), "doc_id")
+        fps.join(m, "doc_id")
         .groupBy("doc_id", "n_sh")
         .agg(
             F.count(F.lit(1)).alias("n_fps"),
@@ -1734,7 +1732,7 @@ def dedup_passage_anchor_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     m = hs.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     last_start = F.greatest(F.col("n_sh") - _WINNOW_W + 1, F.lit(1))
-    win = hs.join(F.broadcast(m), "doc_id").select(
+    win = hs.join(m, "doc_id").select(
         "doc_id",
         "i",
         "h",
@@ -1763,7 +1761,7 @@ def dedup_passage_anchor_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("h")
     )
-    kept = anchors.join(F.broadcast(hot), "h")
+    kept = anchors.join(hot, "h")
     a = kept.select(F.col("h"), F.col("doc_id").alias("doc_a"))
     b = kept.select(F.col("h"), F.col("doc_id").alias("doc_b"))
     return (
@@ -2010,14 +2008,14 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     # LPA/pagerank treatment) was MEASURED SLOWER here (1.9 -> 2.0 s
     # pinned): the co-occurrence edge list is vocabulary-cardinality —
     # the per-round exchange it would remove is already tiny.
-    ed = eagg.join(F.broadcast(strength), "a").localCheckpoint(eager=True)
+    ed = eagg.join(strength, "a").localCheckpoint(eager=True)
     ranks = strength.select(
         F.col("a").alias("token"),
         F.lit(_TR_SCALE).cast("long").alias("pr"),
     )
     for _ in range(_TR_ITERS):
         contrib = ed.join(
-            F.broadcast(ranks), ed["a"] == ranks["token"]
+            ranks, ed["a"] == ranks["token"]
         ).select(F.col("b"), F.expr("(pr * w) DIV s").alias("c"))
         ranks = contrib.groupBy("b").agg(
             F.expr(
@@ -2122,9 +2120,9 @@ def text_bigram_jm_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     lp_tbl = (
         bc.withColumn("a", F.split_part("gram", F.lit(" "), F.lit(1)))
         .withColumn("w", F.split_part("gram", F.lit(" "), F.lit(2)))
-        .join(F.broadcast(ctx), "a")
-        .join(F.broadcast(uni), "w")
-        .crossJoin(F.broadcast(tot))
+        .join(ctx, "a")
+        .join(uni, "w")
+        .crossJoin(tot)
         .select(
             "gram",
             F.log(

@@ -13,8 +13,8 @@ Every query is a pure DataFrame declaration — Catalyst does join
 reordering, predicate pushdown and AQE picks broadcast vs shuffle:
 
 * dims (region/nation/supplier/customer/part at these ratios) are
-  explicitly ``F.broadcast`` where they are guaranteed-small relative
-  to the fact; fact⋈fact joins (lineitem⋈orders) shuffle once on the
+  broadcast by the planner while they fit autoBroadcastJoinThreshold;
+  fact⋈fact joins (lineitem⋈orders) shuffle once on the
   join key and reuse that partitioning for the following group-by where
   the keys line up.
 * EXISTS / NOT EXISTS forms are expressed as one-pass per-group flag
@@ -153,10 +153,10 @@ def tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1"))
     return (
         li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
-        .join(F.broadcast(s), li["l_suppkey"] == s["s_suppkey"])
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("s_nk"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("c_nk"))
+        .join(c, o["o_custkey"] == c["c_custkey"])
+        .join(s, li["l_suppkey"] == s["s_suppkey"])
+        .join(n1, F.col("s_nationkey") == F.col("s_nk"))
+        .join(n2, F.col("c_nationkey") == F.col("c_nk"))
         .filter(pair)
         .groupBy(
             "supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year")
@@ -223,12 +223,12 @@ def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     promo = p.filter(F.col("p_type") == "PROMO").select("p_partkey")
     vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
-        li.join(F.broadcast(promo), li["l_partkey"] == promo["p_partkey"])
+        li.join(promo, li["l_partkey"] == promo["p_partkey"])
         .join(o, li["l_orderkey"] == o["o_orderkey"])
-        .join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
-        .join(F.broadcast(cust_nation), F.col("c_nationkey") == F.col("c_nk"), "inner")
-        .join(F.broadcast(s), li["l_suppkey"] == s["s_suppkey"])
-        .join(F.broadcast(supp_nation), F.col("s_nationkey") == F.col("s_nk"))
+        .join(c, o["o_custkey"] == c["c_custkey"])
+        .join(cust_nation, F.col("c_nationkey") == F.col("c_nk"), "inner")
+        .join(s, li["l_suppkey"] == s["s_suppkey"])
+        .join(supp_nation, F.col("s_nationkey") == F.col("s_nk"))
         .groupBy(F.year("o_orderdate").alias("o_year"))
         .agg(
             F.round(
@@ -274,10 +274,10 @@ def tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     nat = n.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("nation"))
     vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
-        li.join(F.broadcast(widget), li["l_partkey"] == widget["p_partkey"])
+        li.join(widget, li["l_partkey"] == widget["p_partkey"])
         .join(o, li["l_orderkey"] == o["o_orderkey"])
-        .join(F.broadcast(s), li["l_suppkey"] == s["s_suppkey"])
-        .join(F.broadcast(nat), F.col("s_nationkey") == F.col("s_nk"))
+        .join(s, li["l_suppkey"] == s["s_suppkey"])
+        .join(nat, F.col("s_nationkey") == F.col("s_nk"))
         .groupBy("nation", F.year("o_orderdate").alias("o_year"))
         # whole-unit rounding: these sums are ~1e10, where cent-level
         # rounding sits inside fp summation-order noise (a .xx5 boundary
@@ -323,8 +323,8 @@ def tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             li["l_orderkey"] == o["o_orderkey"],
         )
-        .join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
-        .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
+        .join(c, o["o_custkey"] == c["c_custkey"])
+        .join(n, c["c_nationkey"] == n["n_nationkey"])
         .groupBy("c_custkey", "c_name", "n_name")
         .agg(
             F.round(
@@ -372,7 +372,7 @@ def tpch_q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     total = pv.agg((F.avg("val") * 1.5).alias("threshold"))
     return (
-        pv.join(F.broadcast(total))
+        pv.join(total)
         .filter(F.col("val") > F.col("threshold"))
         .select(
             F.col("l_partkey").alias("partkey"), F.round("val", 2).alias("part_value")
@@ -490,7 +490,7 @@ def tpch_q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = table(spark, sf_dir, "part").select("p_partkey", "p_type")
     vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
-        li.join(F.broadcast(p), li["l_partkey"] == p["p_partkey"])
+        li.join(p, li["l_partkey"] == p["p_partkey"])
         .agg(
             F.round(
                 100.0
@@ -545,9 +545,9 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mx = rev.agg(F.max("total_revenue").alias("mx"))
     return (
-        rev.join(F.broadcast(mx))
+        rev.join(mx)
         .filter(F.col("total_revenue") == F.col("mx"))
-        .join(F.broadcast(s), F.col("supplier_no") == s["s_suppkey"])
+        .join(s, F.col("supplier_no") == s["s_suppkey"])
         .select("s_suppkey", "s_name", "total_revenue")
     )
 
@@ -581,7 +581,7 @@ def tpch_q16_part_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_size").isin(1, 4, 9, 16, 25, 36, 49))
     )
     return (
-        li.join(F.broadcast(p), li["l_partkey"] == p["p_partkey"])
+        li.join(p, li["l_partkey"] == p["p_partkey"])
         .groupBy("p_brand", "p_size")
         .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
     )
@@ -618,7 +618,7 @@ def tpch_q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFra
     p = table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#3").select(
         "p_partkey"
     )
-    pruned = li.join(F.broadcast(p), li["l_partkey"] == p["p_partkey"])
+    pruned = li.join(p, li["l_partkey"] == p["p_partkey"])
     w = Window.partitionBy("l_partkey")
     return (
         pruned.withColumn("avg_qty", F.avg("l_quantity").over(w))
@@ -659,7 +659,7 @@ def tpch_q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFra
     )
     return (
         big.join(o, big["l_orderkey"] == o["o_orderkey"])
-        .join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
+        .join(c, o["o_custkey"] == c["c_custkey"])
         .select(
             "c_custkey",
             "c_name",
@@ -697,7 +697,7 @@ def tpch_q19_disjunctive_predicates(spark: SparkSession, sf_dir: str) -> DataFra
     candidate parts."""
     li = table(spark, sf_dir, "lineitem")
     p = table(spark, sf_dir, "part")
-    j = li.join(F.broadcast(p), li["l_partkey"] == p["p_partkey"])
+    j = li.join(p, li["l_partkey"] == p["p_partkey"])
     arm = lambda brand, smax, qlo, qhi: (  # noqa: E731
         (F.col("p_brand") == brand)
         & F.col("p_size").between(1, smax)
@@ -773,7 +773,7 @@ def tpch_q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         counted.filter(
             F.col("late") & (F.col("n_supp") >= 2) & (F.col("n_late") == 1)
         )
-        .join(F.broadcast(s), F.col("l_suppkey") == s["s_suppkey"])
+        .join(s, F.col("l_suppkey") == s["s_suppkey"])
         .groupBy("s_name")
         .agg(F.count(F.lit(1)).alias("numwait"))
     )
@@ -811,10 +811,10 @@ def tpch_q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     recent = o.filter(F.col("o_orderdate") >= "1999-01-01").select("o_custkey")
     return (
-        c.join(F.broadcast(avg_bal))
+        c.join(avg_bal)
         .filter(F.col("c_acctbal") > F.col("threshold"))
         .join(recent, c["c_custkey"] == recent["o_custkey"], "left_anti")
-        .join(F.broadcast(n), F.col("c_nationkey") == n["n_nationkey"])
+        .join(n, F.col("c_nationkey") == n["n_nationkey"])
         .groupBy(F.col("n_name").alias("cntry"))
         .agg(
             F.count(F.lit(1)).alias("numcust"),
@@ -865,7 +865,7 @@ def tpch_q20_excess_stock_suppliers(spark: SparkSession, sf_dir: str) -> DataFra
         F.col("l_shipdate") < "1997-01-01"
     )
     shipped = (
-        li.join(F.broadcast(widget), li["l_partkey"] == widget["p_partkey"])
+        li.join(widget, li["l_partkey"] == widget["p_partkey"])
         .groupBy("l_suppkey", "l_partkey")
         .agg(
             F.sum(F.when(in_1996, F.col("l_quantity")).otherwise(0.0)).alias(
@@ -876,7 +876,7 @@ def tpch_q20_excess_stock_suppliers(spark: SparkSession, sf_dir: str) -> DataFra
     )
     return (
         shipped.filter(F.col("qty_1996") > 0.5 * F.col("qty_total"))
-        .join(F.broadcast(s), F.col("l_suppkey") == s["s_suppkey"])
+        .join(s, F.col("l_suppkey") == s["s_suppkey"])
         .groupBy("s_suppkey", "s_name")
         .agg(F.count(F.lit(1)).alias("excess_parts"))
     )
@@ -921,8 +921,8 @@ def tpch_q2_argmin_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = Window.partitionBy("l_partkey").orderBy("tot", "l_suppkey")
     return (
-        cost.join(F.broadcast(p), cost["l_partkey"] == p["p_partkey"])
-        .join(F.broadcast(s), cost["l_suppkey"] == s["s_suppkey"])
+        cost.join(p, cost["l_partkey"] == p["p_partkey"])
+        .join(s, cost["l_suppkey"] == s["s_suppkey"])
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select("p_partkey", "p_brand", "s_name", F.col("tot").alias("min_cost"))

@@ -235,7 +235,7 @@ def data_health_document(
     ).otherwise(F.col(c))
     base = (
         replicas.filter(F.col("database") == "fsiem")
-        .join(F.broadcast(topology), "node_ip", "left")
+        .join(topology, "node_ip", "left")
         .select(
             shard_num.alias("shard"),
             F.col("device_name").alias("deviceName"),

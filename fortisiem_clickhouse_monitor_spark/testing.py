@@ -11,6 +11,7 @@ import datetime as _dt
 import decimal as _decimal
 import hashlib
 import math
+import re
 
 import duckdb
 
@@ -215,6 +216,35 @@ def compare(
         else:
             problems.append("value mismatch in tail rows")
     return problems
+
+
+def formatted_plan(df) -> str:
+    """``explain("formatted")`` text of ``df`` as a string (it only
+    prints to stdout in PySpark)."""
+    return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+#: Plan text that changes between two builds of the same plan:
+#: expression ids, lambda variable ids (``lambda x_767``), plan ids,
+#: RDD ids and the checkpoint call site (``<unknown>:0`` in one
+#: process, ``NativeMethodAccessorImpl.java:0`` in another).
+_PLAN_NOISE = (
+    (re.compile(r"#\d+"), "#"),
+    (re.compile(r"(lambda \w+?)_\d+"), r"\1_"),
+    (re.compile(r"plan_id=\d+"), "plan_id="),
+    (re.compile(r"RDD\[\d+\]"), "RDD[]"),
+    (re.compile(r"localCheckpoint at [^,\s]+"), "localCheckpoint"),
+)
+
+
+def normalize_plan(text: str) -> str:
+    """``text`` with the per-build noise stripped, so two dumps of the
+    same plan compare equal across builds, sessions and processes."""
+    for pattern, repl in _PLAN_NOISE:
+        text = pattern.sub(repl, text)
+    return text
 
 
 def close_bench_artifact(repo_root: str) -> str | None:

@@ -21,7 +21,7 @@ from __future__ import annotations
 import pytest
 
 import __spark_entry__ as entrymod
-from fortisiem_clickhouse_monitor_spark.testing import type_parity
+from fortisiem_clickhouse_monitor_spark.testing import formatted_plan, type_parity
 
 from conftest import SF_SMALL
 
@@ -49,10 +49,7 @@ def test_oracle_type_parity(spark, duck_small, name, fn, sql):
     "name,fn", _all_pairs(), ids=[p[0] for p in _all_pairs()]
 )
 def test_plan_invariants(spark, name, fn):
-    df = fn(spark, SF_SMALL)
-    plan = spark._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-        df._jdf.queryExecution(), "formatted"
-    )
+    plan = formatted_plan(fn(spark, SF_SMALL))
     assert "CartesianProduct" not in plan, f"{name}: cartesian product in plan"
     assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python UDF"
 
@@ -164,6 +161,80 @@ def test_no_list_built_dataframes():
     assert not found, "use fixtures.local_df instead:\n" + "\n".join(found)
 
 
+_PLAN = "plan changes without it at sf0.1"
+_SMJ = "measured SMJ failure at scale"
+
+#: ``F.broadcast`` hints allowed in the package, by (file, top-level
+#: function), with their count and the reason the hint stays.
+_BROADCAST_ALLOWED = {
+    ("operators/advanced.py", "sketch_bloom_fpr_eval"): (2, _PLAN),
+    ("operators/advanced.py", "sketch_countmin_token_freq"): (1, _PLAN),
+    ("operators/advanced.py", "sketch_hll_intersection_eval"): (2, _PLAN),
+    ("operators/advanced.py", "stats_mann_whitney_u"): (1, _PLAN),
+    ("operators/advanced.py", "timeseries_cross_correlation"): (2, _PLAN),
+    ("operators/behavior.py", "behavior_markov_next_event_eval"): (2, _PLAN),
+    ("operators/corpus.py", "corpus_dsir_select"): (1, _PLAN),
+    ("operators/corpus.py", "corpus_truncation_budget"): (1, _PLAN),
+    ("operators/corpus.py", "text_bm25_scores"): (1, _PLAN),
+    ("operators/dedup.py", "dedup_minhash_band_tuning_eval"): (2, _SMJ),
+    ("operators/graph.py", "_adj_sides"): (2, _SMJ),
+    ("operators/graph.py", "graph_neighborhood_function"): (1, _PLAN),
+    ("operators/graph.py", "graph_ppr_seeded_top20"): (1, _PLAN),
+    ("operators/graph.py", "graph_walk_centrality_top20"): (1, _PLAN),
+    ("operators/intervals.py", "interval_peak_concurrency"): (1, _PLAN),
+    ("operators/linkage.py", "linkage_blocking_quality"): (1, _PLAN),
+    ("operators/profiling.py", "quality_iqr_fence_outliers"): (1, _PLAN),
+    ("operators/similarity.py", "sim_dim_correlation_topk"): (2, _PLAN),
+    ("operators/similarity.py", "sim_ivf_nprobe_frontier"): (1, _PLAN),
+    ("operators/similarity.py", "sim_ivf_pq_topk"): (1, _PLAN),
+    ("operators/similarity.py", "sim_ivf_recall_eval"): (1, _PLAN),
+    ("operators/similarity.py", "sim_ndcg_eval"): (1, _PLAN),
+    ("operators/similarity.py", "sim_pq_adc_recall_eval"): (1, _PLAN),
+    ("operators/similarity.py", "sim_pq_trained_recall_eval"): (2, _PLAN),
+    ("operators/text.py", "text_bigram_jm_logprob"): (1, _PLAN),
+    ("operators/text.py", "text_bigram_logprob"): (1, _PLAN),
+    ("operators/text.py", "text_ccnet_perplexity_buckets"): (1, _PLAN),
+    ("operators/text.py", "text_unigram_logprob"): (1, _PLAN),
+}
+
+
+def test_broadcast_hints_are_listed():
+    """Spark's planner broadcasts a join side by itself while its size
+    estimate is under ``autoBroadcastJoinThreshold`` (checkpoint scans
+    included), so an ``F.broadcast`` hint stays only where removing it
+    changes a registered query's plan or its comment records a measured
+    sort-merge failure at scale; every other hint was deleted with
+    identical plans at sf0.01 and sf0.1 (tools/dump_plans.py)."""
+    import ast
+    import collections
+    import pathlib
+
+    import fortisiem_clickhouse_monitor_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    counts = collections.Counter()
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for top in ast.parse(path.read_text()).body:
+            for node in ast.walk(top):
+                if (
+                    isinstance(node, ast.Call)
+                    and getattr(node.func, "attr", None) == "broadcast"
+                    and getattr(node.func.value, "id", None) == "F"
+                ):
+                    counts[(rel, getattr(top, "name", "<module>"))] += 1
+    allowed = {k: n for k, (n, _) in _BROADCAST_ALLOWED.items()}
+    wrong = sorted(
+        f"{rel}:{fn}: {counts.get((rel, fn), 0)} hints, allowlist "
+        f"{allowed.get((rel, fn), 0)}"
+        for rel, fn in set(counts) | set(allowed)
+        if counts.get((rel, fn), 0) != allowed.get((rel, fn), 0)
+    )
+    assert not wrong, (
+        "F.broadcast hints not in _BROADCAST_ALLOWED (delete the hint if "
+        "the plan is identical without it):\n" + "\n".join(wrong)
+    )
+
 #: Lines of operators/graph.py and tools/dump_round_plan.py that may
 #: alias an edge's second endpoint to ``u`` outside ``graph._undirected``,
 #: by file and source line, with the reason.
@@ -195,7 +266,8 @@ def test_graph_edges_built_once():
     """The part<->supplier edge list is built only in
     ``graph._part_supplier_edges`` (its oracle twin only in
     ``_PS_EDGES_SQL``) and edges are reversed only in
-    ``graph._undirected``, so the queries and
+    ``graph._undirected`` (its oracle twin only in
+    ``_PS_UNDIRECTED_SQL``), so the queries and
     ``tools/dump_round_plan.py`` cannot drift from one definition.
     Oracle SQL strings are not Spark-side builds and are skipped."""
     import ast
@@ -235,6 +307,8 @@ def test_graph_edges_built_once():
     graph_src = files["operators/graph.py"].read_text()
     n_cte = graph_src.count("SELECT DISTINCT l_partkey AS u")
     assert n_cte == 1, f"{n_cte} copies of the e0 CTE; use _PS_EDGES_SQL"
+    n_und = graph_src.count("SELECT v AS u, u AS v FROM e0")
+    assert n_und == 1, f"{n_und} copies of the edges CTE; use _PS_UNDIRECTED_SQL"
     assert not found, (
         "use graph._part_supplier_edges / graph._undirected:\n"
         + "\n".join(found)

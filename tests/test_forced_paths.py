@@ -103,11 +103,11 @@ def test_knn_join_ivf_route_recall(spark, monkeypatch):
     assert recall >= 0.15, f"IVF forced-path recall {recall:.3f} < 0.15"
 
 
-def test_hyperball_merge_shuffle_path_matches_broadcast(spark, monkeypatch):
-    """_hb_merge_round's above-gate shuffle branch must produce exactly
-    the register table the broadcast branch does (the merge is a pure
-    bucket-max — join strategy cannot change it, and this proves it
-    doesn't)."""
+def test_hyperball_merge_shuffle_path_matches_broadcast(spark):
+    """_hb_merge_round's shuffle join (the register table above
+    autoBroadcastJoinThreshold) must produce exactly the register table
+    the broadcast join does (the merge is a pure bucket-max — join
+    strategy cannot change it, and this proves it doesn't)."""
     from fortisiem_clickhouse_monitor_spark.functions import hll
 
     edges = [(1, 2), (2, 3), (3, 4), (4, 1), (1, 3), (5, 6)]
@@ -131,7 +131,6 @@ def test_hyperball_merge_shuffle_path_matches_broadcast(spark, monkeypatch):
 
     via_broadcast = two_rounds()
 
-    monkeypatch.setattr(graph, "_HB_BROADCAST_MAX_ROWS", 0)
     old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:

@@ -1,6 +1,7 @@
 """Tests for the measurement tooling the scale story rests on:
 pure-Python checks of tools/scaling_curves.py and tools/bench_diff.py,
-and a Spark smoke test of tools/dump_round_plan.py."""
+and Spark smoke tests of tools/dump_round_plan.py and the plan
+normalizer behind tools/dump_plans.py."""
 
 from __future__ import annotations
 
@@ -14,10 +15,15 @@ sys.path.insert(
     0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
 )
 
+import __spark_entry__ as entrymod  # noqa: E402
 import bench_diff  # noqa: E402
 import dump_round_plan  # noqa: E402
 import scaling_curves  # noqa: E402
 from conftest import SF_SMALL  # noqa: E402
+from fortisiem_clickhouse_monitor_spark.testing import (  # noqa: E402
+    formatted_plan,
+    normalize_plan,
+)
 
 
 def test_fit_alpha_recovers_known_exponents():
@@ -142,9 +148,17 @@ def test_bench_compact_line_fits_driver_tail():
 def test_dump_round_plan_builds_and_explains(spark, name):
     """Each round the tool rebuilds plans at sf0.001 as a join over the
     query's checkpointed edges, not a bare checkpoint scan."""
-    df = dump_round_plan.BUILDERS[name](spark, SF_SMALL)
-    text = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    text = formatted_plan(dump_round_plan.BUILDERS[name](spark, SF_SMALL))
     assert "== Physical Plan ==" in text
     assert "BroadcastHashJoin" in text
+
+
+def test_normalized_plans_of_two_builds_match(spark):
+    """Two builds of one query differ in expression, RDD and plan ids,
+    but not once normalized: the property that makes two
+    tools/dump_plans.py runs diffable."""
+    build = entrymod.queries()["graph_label_propagation"]
+    a, b = (formatted_plan(build(spark, SF_SMALL)) for _ in range(2))
+    assert a != b
+    assert "localCheckpoint at" in a
+    assert normalize_plan(a) == normalize_plan(b)

@@ -11,13 +11,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from fortisiem_clickhouse_monitor_spark.sources import tables, writers
+from fortisiem_clickhouse_monitor_spark.testing import formatted_plan
 from tests.conftest import SF_SMALL
-
-
-def _plan(spark, df) -> str:
-    return spark._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
 
 
 def test_partitioned_write_prunes(spark, tmp_path_factory):
@@ -27,7 +22,7 @@ def test_partitioned_write_prunes(spark, tmp_path_factory):
 
     back = spark.read.parquet(out)
     one_day = back.filter(F.col("day") == "2024-01-02")
-    plan = _plan(spark, one_day)
+    plan = formatted_plan(one_day)
     # partition filter must be applied at the file index, not post-scan
     assert "PartitionFilters" in plan and "2024-01-02" in plan
     total = back.count()
@@ -56,7 +51,7 @@ def test_bucketed_join_has_no_shuffle(spark):
     joined = l_b.join(
         o_b.hint("merge"), l_b["l_orderkey"] == o_b["o_orderkey"]
     ).select("l_orderkey", "o_totalprice", "l_quantity")
-    plan = _plan(spark, joined)
+    plan = formatted_plan(joined)
     assert "SortMergeJoin" in plan
     # bucketed-on-key join: no shuffle Exchange on either side
     assert not re.search(r"(?<!Broadcast)Exchange \(\d+\)", plan), plan

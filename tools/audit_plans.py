@@ -24,6 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from fortisiem_clickhouse_monitor_spark import registry  # noqa: E402
 from fortisiem_clickhouse_monitor_spark.session import get_spark  # noqa: E402
+from fortisiem_clickhouse_monitor_spark.testing import formatted_plan  # noqa: E402
 
 INTERESTING = {
     "BroadcastHashJoin": "BHJ",
@@ -72,11 +73,7 @@ def main() -> None:
         if only and name not in only:
             continue
         try:
-            df = q.fn(spark, sf_dir)
-            plan = spark._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
-            print(audit(name, plan))
+            print(audit(name, formatted_plan(q.fn(spark, sf_dir))))
         except Exception as e:  # report, don't abort the sweep
             print(f"{name:38s} ERROR {type(e).__name__}: {str(e).splitlines()[0][:100]}")
 

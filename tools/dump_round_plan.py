@@ -24,6 +24,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from fortisiem_clickhouse_monitor_spark.session import get_spark  # noqa: E402
+from fortisiem_clickhouse_monitor_spark.testing import (  # noqa: E402
+    formatted_plan,
+    normalize_plan,
+)
 
 
 def _lpa_round(spark, sf_dir):
@@ -146,10 +150,7 @@ def main() -> None:
     )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("fcm-round-plans")
-    df = BUILDERS[name](spark, sf_dir)
-    text = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-        df._jdf.queryExecution(), "formatted"
-    )
+    text = normalize_plan(formatted_plan(BUILDERS[name](spark, sf_dir)))
     path = os.path.join(out_dir, f"{name}_round_{suffix}.txt")
     with open(path, "w") as fh:
         fh.write(text)
